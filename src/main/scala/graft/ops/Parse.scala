@@ -187,24 +187,22 @@ object Parse {
         .when(isValidJson(j), concat(lit("{\"raw_value\":"), j, lit("}")))
         .otherwise(to_json(struct(j.as("raw_value"))))
 
-    val arrays = base.filter(col("__isarr"))
-      .select(col("custom_id"), posexplode(col("__arr")).as(Seq("idx", "elem")))
-      .select(
-        col("custom_id").as("_source_custom_id"),
-        col("idx").cast(LongType).as("_source_list_index"),
-        coalesce(wrapNonDict(col("elem")),
-          lit("{\"raw_value\":null}")).as("record_json"))
-
-    val objects = base.filter(!col("__isarr"))
-      .select(
-        col("custom_id").as("_source_custom_id"),
-        lit(null).cast(LongType).as("_source_list_index"),
+    // ONE pass over `base` (a union of two filtered branches would run
+    // everything upstream twice — every paid chat call under
+    // LlmUdf.withCompletions): each row inlines one array of records,
+    // the indexed elements of an array answer, else a single record
+    // with a null index
+    def record(idx: Column, json: Column): Column =
+      struct(idx.cast(LongType).as("_source_list_index"), json.as("record_json"))
+    val records = when(col("__isarr"),
+        transform(col("__arr"), (elem, idx) =>
+          record(idx, coalesce(wrapNonDict(elem), lit("{\"raw_value\":null}")))))
+      .otherwise(array(record(lit(null),
         // P4 fallback: unparseable content survives as raw_content
         coalesce(wrapNonDict(col("__obj")),
-          to_json(struct(stripFences(col("content")).as("raw_content"))))
-          .as("record_json"))
+          to_json(struct(stripFences(col("content")).as("raw_content")))))))
 
-    arrays.unionByName(objects)
+    base.select(col("custom_id").as("_source_custom_id"), inline(records))
   }
 
   /** Convenience: whole pipeline from raw JSONL lines. */

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * (reference: batch/dynamo_fetcher.py:205-279) as a single Catalyst
   * expression tree (whole-stage-codegen friendly, no UDF):
   *
-  *   - numeric (int / float / decimal / numeric string): epoch seconds;
+  *   - numeric (int / float / decimal / numeric string, scientific
+  *     notation included): epoch seconds;
   *     values > 1e12 are treated as epoch *milliseconds* and divided by
   *     1000 (heuristic at dynamo_fetcher.py:220-226); fractional seconds
   *     truncate toward zero like Python's `int()`.
@@ -28,7 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object Timestamps {
 
-  private val NumRe = "^[+-]?[0-9]+(\\.[0-9]+)?$"
+  private val NumRe = "^[+-]?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?$"
   // wall-clock prefix + literal space + zone abbreviation
   private val EstRe =
     "^([0-9]{4}-[0-9]{2}-[0-9]{2}[T ][0-9]{2}:[0-9]{2}:[0-9]{2}(?:\\.[0-9]+)?) (EST|EDT)$"

@@ -33,7 +33,7 @@ object StreamBench {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => cleanup()))
   }
-  private[streaming] def tempDir(prefix: String): String = {
+  private def tempDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     tempDirs.add(p)
     p.toString
@@ -51,11 +51,7 @@ object StreamBench {
     var p = tempDirs.poll()
     while (p != null) {
       if (keep(p)) kept.add(p)
-      else try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }
+      else StreamingIngest.deleteTree(p)
       p = tempDirs.poll()
     }
     tempDirs.addAll(kept) // survivors stay tracked for the shutdown hook
@@ -145,15 +141,11 @@ object StreamBench {
     val bench = graft.Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 20 === 0)
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Decontaminate.decontaminated(
-          b.filter(col("doc_id") % 20 =!= 0), bench,
-          col("doc_id"), col("text"), n = 3, maxContamination = 0.8).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(docs, Some(ckpt())) { (b, _) =>
+      graft.ops.Decontaminate.decontaminated(
+        b.filter(col("doc_id") % 20 =!= 0), bench,
+        col("doc_id"), col("text"), n = 3, maxContamination = 0.8).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -203,14 +195,10 @@ object StreamBench {
     val docs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.MinHash.probe(cidx, b.filter(col("doc_id") % 20 =!= 0),
-          col("doc_id"), col("text"), threshold = 0.5).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(docs, Some(ckpt())) { (b, _) =>
+      graft.ops.MinHash.probe(cidx, b.filter(col("doc_id") % 20 =!= 0),
+        col("doc_id"), col("text"), threshold = 0.5).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -249,13 +237,9 @@ object StreamBench {
     val embs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = embs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Similarity.probeSemIndex(idx, b, threshold = 0.30).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(embs, Some(ckpt())) { (b, _) =>
+      graft.ops.Similarity.probeSemIndex(idx, b, threshold = 0.30).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -280,14 +264,10 @@ object StreamBench {
     val docs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Decontaminate.probeVerbatim(idx, b,
-          col("doc_id"), col("text")).queryExecution.toRdd.count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(docs, Some(ckpt())) { (b, _) =>
+      graft.ops.Decontaminate.probeVerbatim(idx, b,
+        col("doc_id"), col("text")).queryExecution.toRdd.count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -314,41 +294,29 @@ object StreamBench {
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val outDir = tempDir("swinnow_out")
     val t0 = System.nanoTime()
-    var cur = idx
-    var corpus = d.select(col("doc_id"), col("text"))
-    var lastExtended = -1L
-    val q = docs.writeStream
-      .foreachBatch { (b0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > lastExtended) {
-          // offset ids: replayed docs are NEW crawl arrivals; the
-          // per-batch multiplier sits above any stage-factor offset
-          // (stageDocs uses i·10⁹, i < factor), keeping batch ids
-          // disjoint from each other and from the standing corpus
-          val b = b0.select((col("doc_id") + lit(1000000000000L * (batchId + 1)))
-            .as("doc_id"), col("text")).localCheckpoint()
-          // OVERLAP probe write and fold (guide §2.6): the fold's
-          // batch fingerprint pass reads nothing from the probe's
-          // output. Disjointness stays proven-and-loud: the probe
-          // write runs its riding guard over the same (standing fps,
-          // batch) pair within this batch body — the production
-          // loop's opt-out ([[StreamingIngest.selfWinnowBatches]]),
-          // mirrored in the measured twin — and a collision fails the
-          // batch before the next one folds.
-          val prevIdx = cur
-          val (_, next) = graft.ops.Parallel.both(
-            graft.ops.SubstringDedup
-              .dupPairsAgainst(prevIdx, corpus, b, col("doc_id"), col("text"))
-              .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId"),
-            graft.ops.SubstringDedup.extendWinnowIndex(prevIdx, b,
-              col("doc_id"), col("text"), checkDisjoint = false))
-          cur = next
-          corpus = corpus.unionByName(b)
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val (_, q) = StreamingIngest.foldBatches(docs, (idx, d.select(col("doc_id"), col("text"))),
+        Some(ckpt())) { case ((prevIdx, corpus), b0, batchId) =>
+      // offset ids: replayed docs are NEW crawl arrivals; the
+      // per-batch multiplier sits above any stage-factor offset
+      // (stageDocs uses i·10⁹, i < factor), keeping batch ids
+      // disjoint from each other and from the standing corpus
+      val b = b0.select((col("doc_id") + lit(1000000000000L * (batchId + 1)))
+        .as("doc_id"), col("text")).localCheckpoint()
+      // OVERLAP probe write and fold (guide §2.6): the fold's
+      // batch fingerprint pass reads nothing from the probe's
+      // output. Disjointness stays proven-and-loud: the probe
+      // write runs its riding guard over the same (standing fps,
+      // batch) pair within this batch body — the production
+      // loop's opt-out ([[StreamingIngest.selfWinnowBatches]]),
+      // mirrored in the measured twin — and a collision fails the
+      // batch before the next one folds.
+      val (_, next) = graft.ops.Parallel.both(
+        StreamingIngest.landBatch(graft.ops.SubstringDedup
+          .dupPairsAgainst(prevIdx, corpus, b, col("doc_id"), col("text")), outDir, batchId),
+        graft.ops.SubstringDedup.extendWinnowIndex(prevIdx, b,
+          col("doc_id"), col("text"), checkDisjoint = false))
+      (next, corpus.unionByName(b))
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -367,14 +335,10 @@ object StreamBench {
     val docs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Tfidf.topTermsAgainst(model, b,
-          col("doc_id"), col("text"), k = 3).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(docs, Some(ckpt())) { (b, _) =>
+      graft.ops.Tfidf.topTermsAgainst(model, b,
+        col("doc_id"), col("text"), k = 3).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -398,39 +362,30 @@ object StreamBench {
                       replayDir: String): StreamMetrics = {
     val docs0 = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).localCheckpoint()
-    var corpus = docs0
-    var model = graft.ops.SuffixArray.trainRepeatGroups(docs0,
+    val model0 = graft.ops.SuffixArray.trainRepeatGroups(docs0,
       col("doc_id"), col("text"), minLen = 32)
     val replay = spark.read.parquet(replayDir)
     val staged = replay.count()
     val docs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
-    var lastExtended = -1L
     var ownedMembers = false // the seed inventory's members pin
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > lastExtended) {
-          val b = b0.select((col("doc_id") + lit(100000000L)).as("doc_id"),
-            reverse(col("text")).as("text")).localCheckpoint()
-          val prevMembers = model.members
-          model = graft.ops.SuffixArray.extendRepeatGroups(model, corpus, b,
-            col("doc_id"), col("text"))
-          // the superseded members pin is dead once extend returns its
-          // eagerly-pinned replacement (the selfSubstrBatches hygiene)
-          if (ownedMembers)
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevMembers)
-          ownedMembers = true
-          model.members
-            .join(b.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .count()
-          corpus = corpus.unionByName(b)
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val (_, q) = StreamingIngest.foldBatches(docs, (model0, docs0), Some(ckpt())) {
+        case ((prev, corpus), b0, _) =>
+      val b = b0.select((col("doc_id") + lit(100000000L)).as("doc_id"),
+        reverse(col("text")).as("text")).localCheckpoint()
+      val model = graft.ops.SuffixArray.extendRepeatGroups(prev, corpus, b,
+        col("doc_id"), col("text"))
+      // the superseded members pin is dead once extend returns its
+      // eagerly-pinned replacement (the selfSubstrBatches hygiene)
+      if (ownedMembers)
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prev.members)
+      ownedMembers = true
+      model.members
+        .join(b.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .count()
+      (model, corpus.unionByName(b))
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -451,15 +406,11 @@ object StreamBench {
     val qs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = qs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.KnnGraph.beamSearch(emb, graph,
-          b.select(col("vec_id").as("query_id"), col("embedding")),
-          k = 5, beam = 16, rounds = 4).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(qs, Some(ckpt())) { (b, _) =>
+      graft.ops.KnnGraph.beamSearch(emb, graph,
+        b.select(col("vec_id").as("query_id"), col("embedding")),
+        k = 5, beam = 16, rounds = 4).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -476,66 +427,51 @@ object StreamBench {
     // the caller sizes nCentroids with the factor (the ScaleSmoke
     // knn_graph deployment rule): a fixed cell count under a ×f
     // corpus makes the per-cell pair fan-out quadratic in f
-    var emb = graft.Tables.embeddings(spark, sfDir)
+    val emb0 = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
-    var graph = graft.ops.KnnGraph.build(emb, k = 5, nCentroids)
+    val graph0 = graft.ops.KnnGraph.build(emb0, k = 5, nCentroids)
       .localCheckpoint()
     val replay = spark.read.parquet(replayDir)
     val staged = replay.count()
     val vs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
-    // the selfKnnBatches whole-body retry guard: a retried micro-batch
-    // would otherwise fold the same shifted vec_ids into the standing
-    // graph/embeddings twice, breaking extend's disjoint-id contract
-    var lastExtended = -1L
     // owned-snapshot flag, NOT batchId > 0: a stream resumed from a
     // checkpoint can deliver its first batch with batchId > 0, and the
     // seed snapshots the loop does not own must never be unpersisted
-    // (r15 advisor; the selfKnnBatches `owned` pattern)
     var owned = false
     val t0 = System.nanoTime()
-    val q = vs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > lastExtended) {
-          // replayed ids shift well past the standing range (seed ids
-          // stay < 16·replicas·1e9) so the fold-in never collides
-          val batch = b.select((col("vec_id") + lit(1000000000000L)).as("vec_id"),
-            col("embedding")).localCheckpoint()
-          val (prevEmb, prevGraph) = (emb, graph)
-          // OVERLAP probe and fold (guide §2.6): the probe reads only
-          // the PRE-fold standing state and the fold never consumes
-          // the probe's output — independent actions, scheduled
-          // concurrently so neither's straggler tail idles the
-          // cluster. Same answer, same per-batch work.
-          val (_, ge) = graft.ops.Parallel.both(
-            graft.ops.KnnGraph.beamSearch(prevEmb, prevGraph,
-              batch.select(col("vec_id").as("query_id"), col("embedding")),
-              k = 5, beam = 16, rounds = 4, nCentroids).count(),
-            {
-              val g = graft.ops.KnnGraph
-                .extend(prevEmb, batch, prevGraph, k = 5, nCentroids)
-                .localCheckpoint()
-              val e = prevEmb.unionByName(batch).localCheckpoint()
-              (g, e)
-            })
-          graph = ge._1
-          emb = ge._2
-          // drop the superseded snapshots (layer-0 state is corpus-
-          // sized: without this the block manager grows linearly with
-          // batch count — the selfKnnBatches hygiene, applied to the
-          // measured twin)
-          if (owned) {
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevGraph)
-          }
-          graft.ops.ConnectedComponents.unpersistCheckpoint(batch)
-          owned = true
-          lastExtended = batchId
-        }
-        ()
+    val (_, q) = StreamingIngest.foldBatches(vs, (emb0, graph0), Some(ckpt())) {
+        case ((prevEmb, prevGraph), b, _) =>
+      // replayed ids shift well past the standing range (seed ids
+      // stay < 16·replicas·1e9) so the fold-in never collides
+      val batch = b.select((col("vec_id") + lit(1000000000000L)).as("vec_id"),
+        col("embedding")).localCheckpoint()
+      // OVERLAP probe and fold (guide §2.6): the probe reads only
+      // the PRE-fold standing state and the fold never consumes
+      // the probe's output — independent actions, scheduled
+      // concurrently so neither's straggler tail idles the
+      // cluster. Same answer, same per-batch work.
+      val (_, (graph, emb)) = graft.ops.Parallel.both(
+        graft.ops.KnnGraph.beamSearch(prevEmb, prevGraph,
+          batch.select(col("vec_id").as("query_id"), col("embedding")),
+          k = 5, beam = 16, rounds = 4, nCentroids).count(),
+        {
+          val g = graft.ops.KnnGraph
+            .extend(prevEmb, batch, prevGraph, k = 5, nCentroids)
+            .localCheckpoint()
+          val e = prevEmb.unionByName(batch).localCheckpoint()
+          (g, e)
+        })
+      // drop the superseded snapshots (the selfKnnBatches hygiene,
+      // applied to the measured twin)
+      if (owned) {
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prevGraph)
       }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+      graft.ops.ConnectedComponents.unpersistCheckpoint(batch)
+      owned = true
+      (emb, graph)
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -555,71 +491,58 @@ object StreamBench {
     */
   def benchSelfLayered(spark: SparkSession, sfDir: String,
                        replayDir: String, nCentroids: Int = 16): StreamMetrics = {
-    var emb = graft.Tables.embeddings(spark, sfDir)
+    val emb0 = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
-    var lg = graft.ops.KnnGraph.buildLayered(emb,
-      graft.ops.KnnGraph.build(emb, k = 5, nCentroids),
+    val built = graft.ops.KnnGraph.buildLayered(emb0,
+      graft.ops.KnnGraph.build(emb0, k = 5, nCentroids),
       k = 5, nCentroids = nCentroids, entryStep = 5L, nLayers = 2)
-    lg = lg.copy(layers = lg.layers.map(_.localCheckpoint()))
+    val lg0 = built.copy(layers = built.layers.map(_.localCheckpoint()))
     val replay = spark.read.parquet(replayDir)
     val staged = replay.count()
     val vs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
-    // the selfLayeredBatches whole-body retry guard: a retried batch
-    // would fold the same shifted vec_ids in twice, breaking extend's
-    // disjoint-id contract
-    var lastExtended = -1L
-    // owned-snapshot flag, NOT batchId > 0 (r15 advisor; see
-    // benchSelfKnn)
+    // owned-snapshot flag, NOT batchId > 0 (see benchSelfKnn)
     var owned = false
     val t0 = System.nanoTime()
-    val q = vs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > lastExtended) {
-          val batch = b.select((col("vec_id") + lit(1000000000000L)).as("vec_id"),
-            col("embedding")).localCheckpoint()
-          val (prevEmb, prevLg) = (emb, lg)
-          // OVERLAP the descent with the fold (guide §2.6): the probe
-          // reads only the PRE-fold hierarchy; the fold never consumes
-          // its output. Within the fold, the changed layers' snapshot
-          // pins and the embedding union are themselves independent
-          // actions — pinned concurrently too (an untouched layer
-          // passes through extendLayered by REFERENCE and keeps its
-          // standing snapshot instead of paying a re-checkpoint copy).
-          val (_, le) = graft.ops.Parallel.both(
-            graft.ops.KnnGraph.beamSearchLayered(prevEmb, prevLg,
-              batch.select(col("vec_id").as("query_id"), col("embedding")),
-              k = 5, beam = 16, rounds = 3).count(),
-            {
-              val ext = graft.ops.KnnGraph.extendLayered(prevEmb, batch, prevLg)
-              val pins = graft.ops.Parallel.run[DataFrame](
-                ext.layers.zip(prevLg.layers).map { case (n, o) =>
-                  () => if (n eq o) o else n.localCheckpoint()
-                } :+ (() => prevEmb.unionByName(batch).localCheckpoint()))
-              (ext.copy(layers = pins.dropRight(1)), pins.last)
-            })
-          lg = le._1
-          emb = le._2
-          // drop the superseded snapshots (the selfLayeredBatches
-          // hygiene, applied to the measured twin): an untouched
-          // upper layer passes through extendLayered by REFERENCE, so
-          // only snapshots the new hierarchy no longer aliases are
-          // dropped
-          if (owned) {
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
-            prevLg.layers.zip(lg.layers).foreach { case (o, n) =>
-              if (!(o eq n))
-                graft.ops.ConnectedComponents.unpersistCheckpoint(o)
-            }
-          }
-          graft.ops.ConnectedComponents.unpersistCheckpoint(batch)
-          owned = true
-          lastExtended = batchId
+    val (_, q) = StreamingIngest.foldBatches(vs, (emb0, lg0), Some(ckpt())) {
+        case ((prevEmb, prevLg), b, _) =>
+      val batch = b.select((col("vec_id") + lit(1000000000000L)).as("vec_id"),
+        col("embedding")).localCheckpoint()
+      // OVERLAP the descent with the fold (guide §2.6): the probe
+      // reads only the PRE-fold hierarchy; the fold never consumes
+      // its output. Within the fold, the changed layers' snapshot
+      // pins and the embedding union are themselves independent
+      // actions — pinned concurrently too (an untouched layer
+      // passes through extendLayered by REFERENCE and keeps its
+      // standing snapshot instead of paying a re-checkpoint copy).
+      val (_, (lg, emb)) = graft.ops.Parallel.both(
+        graft.ops.KnnGraph.beamSearchLayered(prevEmb, prevLg,
+          batch.select(col("vec_id").as("query_id"), col("embedding")),
+          k = 5, beam = 16, rounds = 3).count(),
+        {
+          val ext = graft.ops.KnnGraph.extendLayered(prevEmb, batch, prevLg)
+          val pins = graft.ops.Parallel.run[DataFrame](
+            ext.layers.zip(prevLg.layers).map { case (n, o) =>
+              () => if (n eq o) o else n.localCheckpoint()
+            } :+ (() => prevEmb.unionByName(batch).localCheckpoint()))
+          (ext.copy(layers = pins.dropRight(1)), pins.last)
+        })
+      // drop the superseded snapshots (the selfLayeredBatches
+      // hygiene, applied to the measured twin): an untouched
+      // upper layer passes through extendLayered by REFERENCE, so
+      // only snapshots the new hierarchy no longer aliases are
+      // dropped
+      if (owned) {
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
+        prevLg.layers.zip(lg.layers).foreach { case (o, n) =>
+          if (!(o eq n))
+            graft.ops.ConnectedComponents.unpersistCheckpoint(o)
         }
-        ()
       }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+      graft.ops.ConnectedComponents.unpersistCheckpoint(batch)
+      owned = true
+      (emb, lg)
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -638,13 +561,9 @@ object StreamBench {
     val docs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Bpe.tokenCounts(b, col("doc_id"), col("text"), model).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(docs, Some(ckpt())) { (b, _) =>
+      graft.ops.Bpe.tokenCounts(b, col("doc_id"), col("text"), model).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -664,13 +583,9 @@ object StreamBench {
     val docs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Unigram.tokenCounts(b, col("doc_id"), col("text"), model).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(docs, Some(ckpt())) { (b, _) =>
+      graft.ops.Unigram.tokenCounts(b, col("doc_id"), col("text"), model).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -698,13 +613,9 @@ object StreamBench {
     val docs = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = docs.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ops.Lm.scoreWithTables(tables, b).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(docs, Some(ckpt())) { (b, _) =>
+      graft.ops.Lm.scoreWithTables(tables, b).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -761,14 +672,10 @@ object StreamBench {
     val media = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = media.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.multimodal.PerceptualHash.probeAudio(cidx,
-          b.filter(col("media_id") % 20 =!= 0), maxDist = 3).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(media, Some(ckpt())) { (b, _) =>
+      graft.multimodal.PerceptualHash.probeAudio(cidx,
+        b.filter(col("media_id") % 20 =!= 0), maxDist = 3).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -787,14 +694,10 @@ object StreamBench {
     val media = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = media.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.multimodal.PerceptualHash.probeVideo(fidx,
-          b.filter(col("media_id") % 20 =!= 0), everyN = 2, minShared = 2).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(media, Some(ckpt())) { (b, _) =>
+      graft.multimodal.PerceptualHash.probeVideo(fidx,
+        b.filter(col("media_id") % 20 =!= 0), everyN = 2, minShared = 2).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 
@@ -813,14 +716,10 @@ object StreamBench {
     val media = spark.readStream.schema(replay.schema)
       .option("maxFilesPerTrigger", "2").parquet(replayDir)
     val t0 = System.nanoTime()
-    val q = media.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.multimodal.PerceptualHash.probeImages(cidx,
-          b.filter(col("media_id") % 20 =!= 0), maxDist = 2).count()
-        ()
-      }
-      .option("checkpointLocation", ckpt()).start()
-    try q.processAllAvailable() finally q.stop()
+    val q = StreamingIngest.runBatches(media, Some(ckpt())) { (b, _) =>
+      graft.multimodal.PerceptualHash.probeImages(cidx,
+        b.filter(col("media_id") % 20 =!= 0), maxDist = 2).count()
+    }
     metricsOf(q, (System.nanoTime() - t0) / 1e9, staged)
   }
 

@@ -1,7 +1,12 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming twin of the ingest slice (SURVEY.md §7 step 4):
@@ -119,6 +124,118 @@ object StreamingIngest {
       .dropDuplicatesWithinWatermark(Seq("_source_custom_id", "_source_list_index"))
       .drop("ingest_ts")
 
+  /** Prefix of the temp checkpoint dir [[runBatches]] creates for a
+    * caller that passes no `checkpointDir`.
+    */
+  private[streaming] val CheckpointPrefix = "graft_stream_ckpt"
+
+  /** The micro-batch driver under every `*Batches` twin: `data` →
+    * `writeStream.foreachBatch(body)` → start → `processAllAvailable`
+    * → stop. Returns the stopped query (its `recentProgress` stays
+    * readable).
+    *
+    * With a `checkpointDir`, a restart against the same dir resumes
+    * after the last committed batch; the dir is the caller's and is
+    * never touched. Without one, the query checkpoints into a fresh
+    * temp dir (prefix [[CheckpointPrefix]]) that is deleted once the
+    * query stops: nothing could resume from it, so each such call
+    * reprocesses the source from scratch (fine for tests and one-shot
+    * drains, not for a long-lived pipeline).
+    */
+  private[streaming] def runBatches(data: DataFrame, checkpointDir: Option[String])
+                                   (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val owned = if (checkpointDir.isEmpty)
+      Some(Files.createTempDirectory(CheckpointPrefix)) else None
+    try {
+      val q = data.writeStream
+        .foreachBatch(body)
+        .option("checkpointLocation", checkpointDir.getOrElse(owned.get.toString))
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    } finally owned.foreach(deleteTree)
+  }
+
+  /** Exactly-once output: `out` lands in its own
+    * `$outDir/ingest_batch=N` partition with mode OVERWRITE, so a
+    * retried micro-batch REPLACES its own output instead of appending
+    * duplicates, and downstream reads are idempotent. (The key is not
+    * `batch_id`: partition discovery would shadow the probe outputs'
+    * own batch_id column on read-back.)
+    */
+  private[streaming] def landBatch(out: DataFrame, outDir: String, batchId: Long): Unit =
+    out.write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
+
+  /** [[runBatches]] for a stateless probe against a STANDING artifact
+    * built once before the stream starts: each micro-batch's `probe`
+    * output lands exactly-once via [[landBatch]]. Per-batch work is
+    * the batch's, never a corpus rescan.
+    */
+  private[streaming] def probeBatches(data: DataFrame, outDir: String,
+                                      checkpointDir: Option[String])
+                                     (probe: DataFrame => DataFrame): StreamingQuery =
+    runBatches(data, checkpointDir)((batch, batchId) =>
+      landBatch(probe(batch), outDir, batchId))
+
+  /** [[runBatches]] for a SELF-MAINTAINING loop: `step` probes the
+    * standing state `S` (landing its hits via [[landBatch]]) and
+    * returns the state with the batch folded in, so a duplicate
+    * arriving in a LATER batch of the same stream is caught even when
+    * its original was never in the seed. The whole step runs behind
+    * the retry guard of [[guardedStep]]. Returns the final state and
+    * the stopped query.
+    *
+    * The standing state is process state, not checkpoint state: on
+    * restart, rebuild it from the seed plus previously accepted
+    * batches before resuming (at scale the state is a table whose
+    * APPEND is the durable artifact; the checkpoint only tracks which
+    * source files are consumed). A restart whose seed ALREADY holds a
+    * batch the checkpoint replays fails loudly in the fold's
+    * disjoint-id guard ([[graft.ops.Guards.requireDisjointIds]]),
+    * naming the colliding id, instead of doubling fingerprints.
+    *
+    * Snapshot ownership: a step unpersists only frames the loop created
+    * itself (its batch snapshot, and states it folded once the next
+    * ones materialize, so block-manager usage does not grow with the
+    * batch count); the seed frames are the caller's and are never
+    * unpersisted.
+    */
+  private[streaming] def foldBatches[S](data: DataFrame, seed: S,
+                                        checkpointDir: Option[String])
+                                       (step: (S, DataFrame, Long) => S): (S, StreamingQuery) = {
+    val guarded = guardedStep(seed)(step)
+    var state = seed
+    val q = runBatches(data, checkpointDir)((batch, batchId) => state = guarded(batch, batchId))
+    (state, q)
+  }
+
+  /** The retry guard of [[foldBatches]]: runs `step` only for a batchId
+    * above the last one that completed, and returns the standing state
+    * either way. A retried micro-batch (its first attempt already
+    * landed and folded) neither re-probes nor re-folds: re-probing
+    * against the extended state would match the batch's own entries
+    * and overwrite the first attempt's output with different rows, and
+    * re-folding would insert its ids twice. A step that throws does not
+    * advance the guard, so the retry runs it again.
+    */
+  private[streaming] def guardedStep[S](seed: S)
+                                       (step: (S, DataFrame, Long) => S): (DataFrame, Long) => S = {
+    var state = seed
+    var lastExtended = -1L
+    (batch, batchId) => {
+      if (batchId > lastExtended) {
+        state = step(state, batch, batchId)
+        lastExtended = batchId
+      }
+      state
+    }
+  }
+
+  /** Recursive best-effort delete. */
+  private[streaming] def deleteTree(p: Path): Unit =
+    try Files.walk(p).iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists)
+    catch { case _: Throwable => () }
+
   /** Streaming twin of benchmark decontamination: documents arrive as
     * a stream and each micro-batch runs the SAME batch operator
     * ([[graft.ops.Decontaminate.decontaminated]]) against the static
@@ -128,35 +245,21 @@ object StreamingIngest {
     * benchmark gram set broadcast once per micro-batch. foreachBatch
     * is the right harness for an operator that ends in a per-batch
     * aggregation (a plain streaming groupBy would accrete doc-keyed
-    * state the query never needs).
-    */
-  /** Exactly-once output contract: each micro-batch lands in its own
-    * `batch_id=N` partition directory with mode OVERWRITE, so a
-    * micro-batch retry REPLACES its own output instead of appending
-    * duplicates, and a restart against the same `checkpointDir`
-    * resumes after the last committed batch (pass one to get restart
-    * semantics; the default fresh temp dir reprocesses from scratch —
-    * fine for tests, not for a long-lived pipeline). Readers see
-    * `batch_id` as a partition column via normal discovery.
+    * state the query never needs). Each micro-batch overwrites its own
+    * `batch_id=N` partition (the exactly-once contract of
+    * [[landBatch]]); readers see `batch_id` as a partition column via
+    * normal discovery.
     */
   def decontaminatedBatches(docs: DataFrame, bench: DataFrame,
                             n: Int, maxContamination: Double,
                             outDir: String,
-                            checkpointDir: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Decontaminate
-          .decontaminated(batch, bench, col("doc_id"), col("text"),
-            n, maxContamination)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        () // Scala 2.13 needs the unit for the (DataFrame, Long) => Unit overload
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("decontam_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                            checkpointDir: Option[String] = None): Unit =
+    runBatches(docs, checkpointDir) { (batch, batchId) =>
+      graft.ops.Decontaminate
+        .decontaminated(batch, bench, col("doc_id"), col("text"),
+          n, maxContamination)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
 
   /** Streaming twin of the INCREMENTAL LSH near-dup gate
     * ([[graft.ops.MinHash.nearDupAgainst]]) — the continuous form of
@@ -167,87 +270,27 @@ object StreamingIngest {
     * artifact the batch op documents — at 100 TB a maintained parquet
     * table); per batch, only the batch is shingled and signed, and the
     * bipartite band join's cost tracks the batch size, never corpus².
-    *
-    * Same exactly-once contract as [[decontaminatedBatches]]: each
-    * micro-batch's match pairs land in their own `ingest_batch=N`
-    * partition with mode OVERWRITE (retries replace, restarts resume
-    * from the checkpoint), so downstream reads are idempotent. (The
-    * partition key is NOT named batch_id: partition discovery would
-    * shadow the probe output's own batch_id column on read-back.)
     */
   def nearDupBatches(docs: DataFrame, corpusIndex: graft.ops.MinHash.CorpusIndex,
                      threshold: Double, outDir: String,
-                     checkpointDir: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.MinHash
-          .probe(corpusIndex, batch, col("doc_id"), col("text"), threshold)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("neardup_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                     checkpointDir: Option[String] = None): Unit =
+    probeBatches(docs, outDir, checkpointDir)(
+      graft.ops.MinHash.probe(corpusIndex, _, col("doc_id"), col("text"), threshold))
 
   /** SELF-MAINTAINING streaming near-dup gate — the full crawl loop:
-    * each micro-batch is probed against the standing index (hits land
-    * with the exactly-once `ingest_batch=N` contract), then FOLDED
-    * INTO the index via [[graft.ops.MinHash.extend]], so a duplicate
-    * arriving in a LATER batch of the same stream is caught even when
-    * its original was never in the seed corpus. The WHOLE batch body
-    * is guarded by batchId: a retried micro-batch (its first attempt
-    * already wrote and extended) neither re-probes nor re-extends —
-    * re-probing against the already-extended index would match the
-    * batch's own entries and overwrite the first attempt's output
-    * with different rows.
-    *
-    * The evolving index is process state, not checkpoint state: on
-    * restart, rebuild it from the seed corpus plus previously accepted
-    * batches before resuming (at 100 TB the index is a parquet table
-    * whose APPEND is the durable state — [[graft.ops.MinHash.extend]]'s
-    * scaladoc; the checkpoint only tracks which source files are
-    * consumed). A restart that resumes with a standing state ALREADY
-    * containing a batch the checkpoint replays can no longer corrupt
-    * silently: the extend's disjoint-id guard
-    * ([[graft.ops.Guards.requireDisjointIds]]) rejects the re-fold
-    * loudly, naming the colliding id — the operator chooses between
-    * re-staging the standing state and skipping the replayed batch,
-    * instead of discovering doubled fingerprints downstream.
+    * each micro-batch is probed against the standing index, then
+    * FOLDED INTO it via [[graft.ops.MinHash.extend]] ([[foldBatches]]).
     */
   def selfNearDupBatches(docs: DataFrame,
                          seedIndex: graft.ops.MinHash.CorpusIndex,
                          threshold: Double, outDir: String,
                          checkpointDir: Option[String] = None)
-      : graft.ops.MinHash.CorpusIndex = {
-    import org.apache.spark.sql.functions.col
-    var idx = seedIndex
-    var lastExtended = -1L
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // the WHOLE body is guarded, not just the fold-in: a retried
-        // batch (batchId <= lastExtended, so the first attempt's write
-        // completed) must not re-probe against the already-extended
-        // index — batch rows would match their own entries and the
-        // overwrite would differ from the first attempt, breaking the
-        // exactly-once output contract
-        if (batchId > lastExtended) {
-          graft.ops.MinHash
-            .probe(idx, batch, col("doc_id"), col("text"), threshold)
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-          idx = graft.ops.MinHash.extend(idx, batch, col("doc_id"), col("text"))
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selfnd_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    idx
-  }
+      : graft.ops.MinHash.CorpusIndex =
+    foldBatches(docs, seedIndex, checkpointDir) { (idx, batch, batchId) =>
+      landBatch(graft.ops.MinHash.probe(idx, batch, col("doc_id"), col("text"), threshold),
+        outDir, batchId)
+      graft.ops.MinHash.extend(idx, batch, col("doc_id"), col("text"))
+    }._1
 
   /** SELF-MAINTAINING LM quality gate — [[selfNearDupBatches]]'s
     * shape for the reference model: each micro-batch is
@@ -260,85 +303,45 @@ object StreamingIngest {
     * keeps. The model mutates between batches, so the bounded lookup
     * tables re-derive per batch (unlike [[lmScoreBatches]]'s standing
     * tables); the merged counts localCheckpoint each fold to cut the
-    * union+groupBy lineage. Same batchId retry guard and
-    * exactly-once `ingest_batch=N` contract as the other self loops.
-    * Returns the final extended model.
+    * union+groupBy lineage. Returns the final extended model.
     */
   def selfLmBatches(docs: DataFrame, seedModel: graft.ops.Lm.LmModel,
                     gateBitsFp: Long, outDir: String,
                     checkpointDir: Option[String] = None)
-      : graft.ops.Lm.LmModel = {
-    import org.apache.spark.sql.functions.{col, lit}
-    var model = seedModel
-    var lastExtended = -1L
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // whole-body retry guard (see selfNearDupBatches): re-scoring
-        // a retried batch against the already-extended model would
-        // overwrite the first attempt's output with different scores
-        if (batchId > lastExtended) {
-          val accepted = graft.ops.Lm.scoreWith(model, batch)
-            .filter(col("bits_fp") <= lit(gateBitsFp))
-            .localCheckpoint()
-          accepted.write.mode("overwrite")
-            .parquet(s"$outDir/ingest_batch=$batchId")
-          val acceptedDocs = batch.join(
-            accepted.select(col("doc_id")), Seq("doc_id"), "leftsemi")
-          val m = graft.ops.Lm.extend(model, acceptedDocs, lit(true))
-          model = graft.ops.Lm.LmModel(
-            m.words.localCheckpoint(), m.rawBg.localCheckpoint())
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selflm_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    model
-  }
+      : graft.ops.Lm.LmModel =
+    foldBatches(docs, seedModel, checkpointDir) { (model, batch, batchId) =>
+      val accepted = graft.ops.Lm.scoreWith(model, batch)
+        .filter(col("bits_fp") <= lit(gateBitsFp))
+        .localCheckpoint()
+      landBatch(accepted, outDir, batchId)
+      val acceptedDocs = batch.join(
+        accepted.select(col("doc_id")), Seq("doc_id"), "leftsemi")
+      val m = graft.ops.Lm.extend(model, acceptedDocs, lit(true))
+      graft.ops.Lm.LmModel(m.words.localCheckpoint(), m.rawBg.localCheckpoint())
+    }._1
 
   /** SELF-MAINTAINING media near-dup gate — [[selfNearDupBatches]]'s
     * shape for the perceptual family: each micro-batch is decoded +
     * hashed ONCE, probed against the standing image index, then its
     * hash table (not its payloads — the decode is never repeated) is
     * folded in via [[graft.multimodal.PerceptualHash.extendHashIndex]],
-    * so a re-encoded copy arriving in a later batch is caught. Same
-    * batchId retry guard and restart contract as
-    * [[selfNearDupBatches]].
+    * so a re-encoded copy arriving in a later batch is caught.
     */
   def selfMediaNearDupBatches(media: DataFrame,
                               seedIndex: graft.multimodal.PerceptualHash.HashIndex,
                               maxDist: Int, outDir: String,
                               checkpointDir: Option[String] = None)
-      : graft.multimodal.PerceptualHash.HashIndex = {
-    import org.apache.spark.sql.functions.col
-    var idx = seedIndex
-    var lastExtended = -1L
-    val q = media.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // whole-body retry guard (see selfNearDupBatches): a retried
-        // batch must not re-probe the index it already extended
-        if (batchId > lastExtended) {
-          // one decode+hash pass serves BOTH the probe and the extension
-          val bHashes = graft.multimodal.PerceptualHash.imageHashes(batch)
-            .select(col("media_id").as("pid"), col("ahash").as("ph"))
-            .localCheckpoint()
-          graft.multimodal.PerceptualHash
-            .probeHashes(idx, bHashes.select(col("pid").as("batch_id"),
-              col("ph").as("bh")), maxDist)
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-          idx = graft.multimodal.PerceptualHash.extendHashIndex(idx, bHashes)
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selfmnd_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    idx
-  }
+      : graft.multimodal.PerceptualHash.HashIndex =
+    foldBatches(media, seedIndex, checkpointDir) { (idx, batch, batchId) =>
+      // one decode+hash pass serves BOTH the probe and the extension
+      val bHashes = graft.multimodal.PerceptualHash.imageHashes(batch)
+        .select(col("media_id").as("pid"), col("ahash").as("ph"))
+        .localCheckpoint()
+      landBatch(graft.multimodal.PerceptualHash
+        .probeHashes(idx, bHashes.select(col("pid").as("batch_id"),
+          col("ph").as("bh")), maxDist), outDir, batchId)
+      graft.multimodal.PerceptualHash.extendHashIndex(idx, bHashes)
+    }._1
 
   /** Streaming twin of the SEMANTIC decontamination gate
     * ([[graft.ops.Similarity.semanticContamination]]) — the
@@ -348,26 +351,14 @@ object StreamingIngest {
     * [[graft.ops.Similarity.SemIndex]] (coarse-quantizer geometry +
     * pre-exploded benchmark probes, built once before the stream
     * starts) and broadcast-joined to the bench probes; flagged
-    * (vec_id, bench_id, score ≥ threshold) rows land with the same
-    * exactly-once `ingest_batch=N` overwrite contract as
-    * [[nearDupBatches]].
+    * (vec_id, bench_id, score ≥ threshold) rows land per batch.
     */
   def semDecontamBatches(embeddings: DataFrame,
                          semIndex: graft.ops.Similarity.SemIndex,
                          threshold: Double, outDir: String,
-                         checkpointDir: Option[String] = None): Unit = {
-    val q = embeddings.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Similarity
-          .probeSemIndex(semIndex, batch, threshold)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("semdec_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                         checkpointDir: Option[String] = None): Unit =
+    probeBatches(embeddings, outDir, checkpointDir)(
+      graft.ops.Similarity.probeSemIndex(semIndex, _, threshold))
 
   /** Streaming twin of the VERBATIM decontamination gate
     * ([[graft.ops.Decontaminate.verbatimContaminationSampled]]) — the
@@ -378,30 +369,17 @@ object StreamingIngest {
     * the STANDING [[graft.ops.Decontaminate.VerbatimIndex]] (the
     * bench's winnowed seeds + texts, built once before the stream
     * starts — both broadcast-sized by construction), and each batch
-    * document's exact-overlap contamination row lands with the same
-    * exactly-once `ingest_batch=N` overwrite contract as
-    * [[nearDupBatches]] (retries replace, restarts resume from the
-    * checkpoint). Per-batch answer == the batch operator on that
-    * batch (spec-pinned); no cross-batch state — a document's
-    * contamination is wholly contained in its own row.
+    * document's exact-overlap contamination row lands per batch.
+    * Per-batch answer == the batch operator on that batch
+    * (spec-pinned); no cross-batch state — a document's contamination
+    * is wholly contained in its own row.
     */
   def verbatimDecontamBatches(docs: DataFrame,
                               idx: graft.ops.Decontaminate.VerbatimIndex,
                               outDir: String,
-                              checkpointDir: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Decontaminate
-          .probeVerbatim(idx, batch, col("doc_id"), col("text"))
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("verbdec_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                              checkpointDir: Option[String] = None): Unit =
+    probeBatches(docs, outDir, checkpointDir)(
+      graft.ops.Decontaminate.probeVerbatim(idx, _, col("doc_id"), col("text")))
 
   /** The CURATION CAPSTONE on the stream — the composed production
     * crawl pipeline ([[graft.ops.Curate.curateFull]]) per micro-batch
@@ -413,7 +391,7 @@ object StreamingIngest {
     *   [[graft.ops.Decontaminate.VerbatimIndex]]) → incremental
     *   first-wins exact dedup (standing keep table) → Knuth subsample
     *
-    * Survivors land exactly-once (`ingest_batch=N` overwrite). The
+    * Survivors land exactly-once ([[landBatch]]). The
     * only cross-batch state is the first-wins keep table
     * (text → min id over everything seen, the [[graft.ops.Curate
     * .curate]] dedup semantics): each batch FOLDS ITS ROWS IN FIRST —
@@ -425,7 +403,8 @@ object StreamingIngest {
     * RESTART CONTRACT — the strongest of the self-maintaining family:
     * the fold is IDEMPOTENT (min-merge of a batch already folded
     * changes nothing), so a replayed micro-batch re-lands exactly its
-    * first attempt's rows with no whole-body retry guard needed; a
+    * first attempt's rows, and the loop runs on [[runBatches]] without
+    * [[foldBatches]]' retry guard on purpose; a
     * process restart rebuilds the keep table from the replayed source
     * (or resumes from a persisted `seedSeen` — the returned frame is
     * the artifact to persist), and the checkpoint tracks consumption.
@@ -449,74 +428,66 @@ object StreamingIngest {
                     maxContamination: Double = 0.6, maxVerbatim: Double = 0.2,
                     semThreshold: Double = 0.30,
                     sampleBp: Int = 8000): DataFrame = {
-    import org.apache.spark.sql.functions._
     var seen: DataFrame = seedSeen.orNull // (text, keep_id)
     var ownedSeen = false
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-        // fold FIRST (idempotent min-merge): one narrow standing scan
-        val bMins = b.groupBy(col("text")).agg(min(col("doc_id")).as("keep_id"))
-        val newSeen = (if (seen == null) bMins else {
-          val folded = seen.join(
-              broadcast(bMins.select(col("text"), col("keep_id").as("b_keep"))),
-              Seq("text"), "left")
-            .select(col("text"), least(col("keep_id"),
-              coalesce(col("b_keep"), col("keep_id"))).as("keep_id"))
-          val hitTexts = seen.join(broadcast(bMins.select(col("text"))),
-            Seq("text"), "left_semi").select(col("text"))
-          folded.unionByName(
-            bMins.join(broadcast(hitTexts), Seq("text"), "left_anti"))
-        }).localCheckpoint()
-        // batch-side gates — each one the batch operator on the batch
-        val scored = b.select(col("doc_id").as("id"), col("text"),
-          graft.ops.TextStats.qualityScore(col("text")).as("quality"))
-        val rep = graft.ops.TextStats
-          .repetitionSignals(b, col("doc_id"), col("text"))
-          .select(col("id"), col("top_gram_frac"))
-        val cont = graft.ops.Decontaminate
-          .contamination(b, bench, col("doc_id"), col("text"))
-          .select(col("id"), col("contamination"))
-        val bEmb = embeddings.join(
-          broadcast(b.select(col("doc_id").as("vec_id"))),
-          Seq("vec_id"), "left_semi")
-        val semHit = graft.ops.Similarity
-          .probeSemIndex(semIdx, bEmb, semThreshold)
-          .select(col("vec_id").as("id")).distinct()
-        val verbHit = graft.ops.Decontaminate
-          .probeVerbatim(verbIdx, b, col("doc_id"), col("text"))
-          .filter(col("contamination") >= maxVerbatim)
-          .select(col("doc_id").as("id"))
-        // keep adjudication against the FOLDED table, probed narrowly:
-        // standing scanned once with the batch's ids broadcast
-        val batchKeep = newSeen.join(
-            broadcast(b.select(col("doc_id").as("keep_id"))),
-            Seq("keep_id"), "left_semi")
-          .select(col("keep_id").as("id"))
-        scored
-          .join(rep, Seq("id"))
-          .join(cont, Seq("id"))
-          .join(broadcast(batchKeep), Seq("id"), "left_semi")
-          .join(semHit, Seq("id"), "left_anti")
-          .join(verbHit, Seq("id"), "left_anti")
-          .filter(col("quality") >= minQuality &&
-            col("top_gram_frac") <= maxTopGram &&
-            col("contamination") < maxContamination &&
-            graft.ops.Sampling.hashBucket(col("id"), 10000) < sampleBp)
-          .select(col("id"), col("quality"), col("top_gram_frac"),
-            col("contamination"))
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        val prev = seen
-        seen = newSeen
-        if (ownedSeen) graft.ops.ConnectedComponents.unpersistCheckpoint(prev)
-        ownedSeen = true
-        graft.ops.ConnectedComponents.unpersistCheckpoint(b)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("curate_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    runBatches(docs, checkpointDir) { (batch, batchId) =>
+      val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+      // fold FIRST (idempotent min-merge): one narrow standing scan
+      val bMins = b.groupBy(col("text")).agg(min(col("doc_id")).as("keep_id"))
+      val newSeen = (if (seen == null) bMins else {
+        val folded = seen.join(
+            broadcast(bMins.select(col("text"), col("keep_id").as("b_keep"))),
+            Seq("text"), "left")
+          .select(col("text"), least(col("keep_id"),
+            coalesce(col("b_keep"), col("keep_id"))).as("keep_id"))
+        val hitTexts = seen.join(broadcast(bMins.select(col("text"))),
+          Seq("text"), "left_semi").select(col("text"))
+        folded.unionByName(
+          bMins.join(broadcast(hitTexts), Seq("text"), "left_anti"))
+      }).localCheckpoint()
+      // batch-side gates — each one the batch operator on the batch
+      val scored = b.select(col("doc_id").as("id"), col("text"),
+        graft.ops.TextStats.qualityScore(col("text")).as("quality"))
+      val rep = graft.ops.TextStats
+        .repetitionSignals(b, col("doc_id"), col("text"))
+        .select(col("id"), col("top_gram_frac"))
+      val cont = graft.ops.Decontaminate
+        .contamination(b, bench, col("doc_id"), col("text"))
+        .select(col("id"), col("contamination"))
+      val bEmb = embeddings.join(
+        broadcast(b.select(col("doc_id").as("vec_id"))),
+        Seq("vec_id"), "left_semi")
+      val semHit = graft.ops.Similarity
+        .probeSemIndex(semIdx, bEmb, semThreshold)
+        .select(col("vec_id").as("id")).distinct()
+      val verbHit = graft.ops.Decontaminate
+        .probeVerbatim(verbIdx, b, col("doc_id"), col("text"))
+        .filter(col("contamination") >= maxVerbatim)
+        .select(col("doc_id").as("id"))
+      // keep adjudication against the FOLDED table, probed narrowly:
+      // standing scanned once with the batch's ids broadcast
+      val batchKeep = newSeen.join(
+          broadcast(b.select(col("doc_id").as("keep_id"))),
+          Seq("keep_id"), "left_semi")
+        .select(col("keep_id").as("id"))
+      landBatch(scored
+        .join(rep, Seq("id"))
+        .join(cont, Seq("id"))
+        .join(broadcast(batchKeep), Seq("id"), "left_semi")
+        .join(semHit, Seq("id"), "left_anti")
+        .join(verbHit, Seq("id"), "left_anti")
+        .filter(col("quality") >= minQuality &&
+          col("top_gram_frac") <= maxTopGram &&
+          col("contamination") < maxContamination &&
+          graft.ops.Sampling.hashBucket(col("id"), 10000) < sampleBp)
+        .select(col("id"), col("quality"), col("top_gram_frac"),
+          col("contamination")), outDir, batchId)
+      val prev = seen
+      seen = newSeen
+      if (ownedSeen) graft.ops.ConnectedComponents.unpersistCheckpoint(prev)
+      ownedSeen = true
+      graft.ops.ConnectedComponents.unpersistCheckpoint(b)
+    }
     seen
   }
 
@@ -526,37 +497,25 @@ object StreamingIngest {
     * edge artifact built once before the stream starts — the
     * write-once-probe-many accounting of the other standing indexes).
     * Per-batch work is |batch|·beam frontier rows per round against
-    * the standing edges, never a corpus scan. Same exactly-once
-    * `ingest_batch=N` overwrite contract as [[nearDupBatches]].
+    * the standing edges, never a corpus scan.
     */
   def graphAnnBatches(queries: DataFrame, embeddings: DataFrame,
                       graph: DataFrame, k: Int, beam: Int, rounds: Int,
                       outDir: String,
                       checkpointDir: Option[String] = None,
-                      nCentroids: Int = 16): Unit = {
-    import org.apache.spark.sql.functions.col
-    val q = queries.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.KnnGraph.beamSearch(embeddings, graph,
-            batch.select(col("vec_id").as("query_id"), col("embedding")),
-            k, beam, rounds, nCentroids)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("gann_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                      nCentroids: Int = 16): Unit =
+    probeBatches(queries, outDir, checkpointDir)(batch =>
+      graft.ops.KnnGraph.beamSearch(embeddings, graph,
+        batch.select(col("vec_id").as("query_id"), col("embedding")),
+        k, beam, rounds, nCentroids))
 
   /** SELF-MAINTAINING graph index — [[selfNearDupBatches]]'s shape
     * for the ANN graph: each micro-batch of new vectors beam-searches
-    * the STANDING graph (hits land exactly-once), then folds in via
+    * the STANDING graph, then folds in via
     * [[graft.ops.KnnGraph.extend]]. Because extend provably equals
     * the full rebuild, the standing graph after any number of batches
     * IS `build(everything seen)` — fold-in order invisible
-    * (spec-pinned). Same whole-body retry guard and process-state
-    * restart contract as the other self loops; `seedEmb` must carry
+    * (spec-pinned). `seedEmb` must carry
     * the coarse-quantizer seed ids (the published geometry). Returns
     * the final (embeddings, graph) pair.
     */
@@ -566,60 +525,39 @@ object StreamingIngest {
                      checkpointDir: Option[String] = None,
                      nCentroids: Int = 16)
       : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    var emb = seedEmb.select(col("vec_id"), col("embedding"))
-    var graph = seedGraph
-    var lastExtended = -1L
-    // snapshots created INSIDE the loop are ours to drop once the next
-    // batch's checkpoints materialize (block-manager usage would
-    // otherwise grow linearly with batch count over a long stream —
-    // layer-0-sized blocks per batch); the SEED frames are the
-    // caller's, never unpersisted
     var owned = false
-    val q = newVecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > lastExtended) {
-          val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
-          val (prevEmb, prevGraph) = (emb, graph)
-          // OVERLAP probe and fold (guide §2.6): the probe reads only
-          // the PRE-fold standing state and the fold never consumes
-          // its output — independent actions, scheduled concurrently.
-          val (_, ge) = graft.ops.Parallel.both(
-            graft.ops.KnnGraph.beamSearch(prevEmb, prevGraph,
-                b.select(col("vec_id").as("query_id"), col("embedding")),
-                k, beam, rounds, nCentroids)
-              .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId"),
-            {
-              val g = graft.ops.KnnGraph
-                .extend(prevEmb, b, prevGraph, k, nCentroids)
-                .localCheckpoint()
-              val e = prevEmb.unionByName(b).localCheckpoint()
-              (g, e)
-            })
-          graph = ge._1
-          emb = ge._2
-          if (owned) {
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevGraph)
-          }
-          graft.ops.ConnectedComponents.unpersistCheckpoint(b)
-          owned = true
-          lastExtended = batchId
-        }
-        ()
+    foldBatches(newVecs, (seedEmb.select(col("vec_id"), col("embedding")), seedGraph),
+        checkpointDir) { case ((prevEmb, prevGraph), batch, batchId) =>
+      val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
+      // OVERLAP probe and fold (guide §2.6): the probe reads only
+      // the PRE-fold standing state and the fold never consumes
+      // its output — independent actions, scheduled concurrently.
+      val (_, (graph, emb)) = graft.ops.Parallel.both(
+        landBatch(graft.ops.KnnGraph.beamSearch(prevEmb, prevGraph,
+            b.select(col("vec_id").as("query_id"), col("embedding")),
+            k, beam, rounds, nCentroids), outDir, batchId),
+        {
+          val g = graft.ops.KnnGraph
+            .extend(prevEmb, b, prevGraph, k, nCentroids)
+            .localCheckpoint()
+          val e = prevEmb.unionByName(b).localCheckpoint()
+          (g, e)
+        })
+      if (owned) {
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prevGraph)
       }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selfknn_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    (emb, graph)
+      graft.ops.ConnectedComponents.unpersistCheckpoint(b)
+      owned = true
+      (emb, graph)
+    }._1
   }
 
   /** SELF-MAINTAINING LAYERED graph — [[selfKnnBatches]]'s crawl loop
     * for the multi-level hierarchy ([[graft.ops.KnnGraph
     * .LayeredGraph]]): each micro-batch of new vectors descends the
-    * STANDING hierarchy ([[graft.ops.KnnGraph.beamSearchLayered]],
-    * hits land exactly-once), then folds in via [[graft.ops.KnnGraph
+    * STANDING hierarchy ([[graft.ops.KnnGraph.beamSearchLayered]]),
+    * then folds in via [[graft.ops.KnnGraph
     * .extendLayered]] — EVERY layer by the spec-pinned `extend ==
     * build(union)` contract (layer ℓ folds only the batch's nested
     * sample, O(batch/entryStep^ℓ); a batch whose sample is empty
@@ -629,8 +567,7 @@ object StreamingIngest {
     * satisfying `id % entryStep^ℓ == 0` join their layer the batch
     * they arrive), and per-batch cost carries NO corpus-proportional
     * term — the crawl loop is O(batch) like the flat index's.
-    * Same whole-body retry guard and process-state restart contract
-    * as [[selfKnnBatches]]; `seedEmb` must carry the base geometry's
+    * `seedEmb` must carry the base geometry's
     * seed ids (the extend contract). Returns the final
     * (embeddings, hierarchy) pair.
     */
@@ -640,67 +577,49 @@ object StreamingIngest {
                          outDir: String,
                          checkpointDir: Option[String] = None)
       : (DataFrame, graft.ops.KnnGraph.LayeredGraph) = {
-    import org.apache.spark.sql.functions.col
-    var emb = seedEmb.select(col("vec_id"), col("embedding"))
-    var lg = seedLayered
-    var lastExtended = -1L
-    // ownership discipline of [[selfKnnBatches]]: snapshots the loop
-    // created are dropped once the next batch's materialize (layer 0
-    // is corpus-sized — without this, block-manager usage grows
-    // linearly with batch count); seed frames are the caller's
+    // layer 0 is corpus-sized: an untouched layer keeps its snapshot,
+    // so ownership is tracked per layer
     var ownedLayers = Set.empty[Int]
     var ownedEmb = false
-    val q = newVecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > lastExtended) {
-          val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
-          val (prevEmb, prevLg) = (emb, lg)
-          // OVERLAP the descent with the fold (guide §2.6): the probe
-          // reads only the PRE-fold hierarchy and the fold never
-          // consumes its output — independent actions, scheduled
-          // concurrently. Within the fold, the touched layers' pins
-          // and the embedding union are independent too (an untouched
-          // layer passes through extendLayered by REFERENCE and keeps
-          // its standing snapshot — the per-layer lineage cut touches
-          // only folded layers).
-          val (_, le) = graft.ops.Parallel.both(
-            graft.ops.KnnGraph.beamSearchLayered(prevEmb, prevLg,
-                b.select(col("vec_id").as("query_id"), col("embedding")),
-                k, beam, rounds)
-              .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId"),
-            {
-              val ext = graft.ops.KnnGraph.extendLayered(prevEmb, b, prevLg)
-              val pins = graft.ops.Parallel.run[DataFrame](
-                ext.layers.zip(prevLg.layers).map { case (n, o) =>
-                  () => if (n eq o) o else n.localCheckpoint()
-                } :+ (() => prevEmb.unionByName(b).localCheckpoint()))
-              (ext.copy(layers = pins.dropRight(1)), pins.last)
-            })
-          val newLayers = le._1.layers.zipWithIndex.map { case (n, i) =>
-            val o = prevLg.layers(i)
-            if (n eq o) o
-            else {
-              if (ownedLayers(i))
-                graft.ops.ConnectedComponents.unpersistCheckpoint(o)
-              ownedLayers += i
-              n
-            }
-          }
-          lg = le._1.copy(layers = newLayers)
-          emb = le._2
-          if (ownedEmb)
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
-          ownedEmb = true
-          graft.ops.ConnectedComponents.unpersistCheckpoint(b)
-          lastExtended = batchId
+    foldBatches(newVecs, (seedEmb.select(col("vec_id"), col("embedding")), seedLayered),
+        checkpointDir) { case ((prevEmb, prevLg), batch, batchId) =>
+      val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
+      // OVERLAP the descent with the fold (guide §2.6): the probe
+      // reads only the PRE-fold hierarchy and the fold never
+      // consumes its output — independent actions, scheduled
+      // concurrently. Within the fold, the touched layers' pins
+      // and the embedding union are independent too (an untouched
+      // layer passes through extendLayered by REFERENCE and keeps
+      // its standing snapshot — the per-layer lineage cut touches
+      // only folded layers).
+      val (_, (lg, emb)) = graft.ops.Parallel.both(
+        landBatch(graft.ops.KnnGraph.beamSearchLayered(prevEmb, prevLg,
+            b.select(col("vec_id").as("query_id"), col("embedding")),
+            k, beam, rounds), outDir, batchId),
+        {
+          val ext = graft.ops.KnnGraph.extendLayered(prevEmb, b, prevLg)
+          val pins = graft.ops.Parallel.run[DataFrame](
+            ext.layers.zip(prevLg.layers).map { case (n, o) =>
+              () => if (n eq o) o else n.localCheckpoint()
+            } :+ (() => prevEmb.unionByName(b).localCheckpoint()))
+          (ext.copy(layers = pins.dropRight(1)), pins.last)
+        })
+      val newLayers = lg.layers.zipWithIndex.map { case (n, i) =>
+        val o = prevLg.layers(i)
+        if (n eq o) o
+        else {
+          if (ownedLayers(i))
+            graft.ops.ConnectedComponents.unpersistCheckpoint(o)
+          ownedLayers += i
+          n
         }
-        ()
       }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selflayered_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    (emb, lg)
+      if (ownedEmb)
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prevEmb)
+      ownedEmb = true
+      graft.ops.ConnectedComponents.unpersistCheckpoint(b)
+      (emb, lg.copy(layers = newLayers))
+    }._1
   }
 
   /** Streaming twin of the BPE tokenizer ([[graft.ops.Bpe]]): every
@@ -710,24 +629,12 @@ object StreamingIngest {
     * the model's end-state segmentation; out-of-vocabulary words (the
     * case streaming exists for) segment on the fly through the merge
     * list. Per-batch work is the batch's words, never the corpus.
-    * Same exactly-once `ingest_batch=N` overwrite contract as
-    * [[nearDupBatches]].
     */
   def bpeTokenizeBatches(docs: DataFrame, model: graft.ops.Bpe.BpeModel,
                          outDir: String,
-                         checkpointDir: Option[String] = None): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Bpe
-          .tokenCounts(batch, col("doc_id"), col("text"), model)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("bpe_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                         checkpointDir: Option[String] = None): Unit =
+    probeBatches(docs, outDir, checkpointDir)(
+      graft.ops.Bpe.tokenCounts(_, col("doc_id"), col("text"), model))
 
   /** Streaming twin of the unigram-LM tokenizer
     * ([[graft.ops.Unigram]]): every micro-batch of a document stream
@@ -736,33 +643,21 @@ object StreamingIngest {
     * under the broadcast cost map; characters the model never saw
     * (the case streaming exists for) price at the Inf `<unk>`
     * penalty rather than failing. Per-batch work is the batch's
-    * words, never the corpus. Same exactly-once `ingest_batch=N`
-    * overwrite contract as [[nearDupBatches]].
+    * words, never the corpus.
     */
   def unigramTokenizeBatches(docs: DataFrame,
                              model: graft.ops.Unigram.UnigramModel,
                              outDir: String,
-                             checkpointDir: Option[String] = None): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Unigram
-          .tokenCounts(batch, col("doc_id"), col("text"), model)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("unigram_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                             checkpointDir: Option[String] = None): Unit =
+    probeBatches(docs, outDir, checkpointDir)(
+      graft.ops.Unigram.tokenCounts(_, col("doc_id"), col("text"), model))
 
   /** Streaming twin of the LM quality gate: every micro-batch of a
     * document stream is perplexity-scored against a STANDING
     * [[graft.ops.Lm.LmModel]] trained once before the stream starts
     * (the CCNet filter as a crawl-ingest stage). Per-batch work is
     * the batch's bigram explode + broadcast lookups — proportional
-    * to the batch, never the corpus. Same exactly-once
-    * `ingest_batch=N` overwrite contract as [[nearDupBatches]].
+    * to the batch, never the corpus.
     */
   def lmScoreBatches(docs: DataFrame, model: graft.ops.Lm.LmModel,
                      outDir: String,
@@ -775,16 +670,7 @@ object StreamingIngest {
     val tables = graft.ops.Lm.LmScoreTables(
       t0.vocab.localCheckpoint(false), t0.vc.localCheckpoint(false),
       t0.bg.localCheckpoint(false), t0.pf.localCheckpoint(false))
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Lm.scoreWithTables(tables, batch)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("lmscore_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    probeBatches(docs, outDir, checkpointDir)(graft.ops.Lm.scoreWithTables(tables, _))
   }
 
   /** Streaming twin of the standing tf-idf scorer
@@ -793,66 +679,33 @@ object StreamingIngest {
     * .DfStats]] (trained once before the stream starts; its df table
     * is already a materialized checkpoint) — per-batch work is the
     * batch explode plus ONE vocab-keyed join, never a corpus rescan.
-    * Same exactly-once `ingest_batch=N` overwrite contract as the
-    * other probe twins.
     */
   def dfScoreBatches(docs: DataFrame, model: graft.ops.Tfidf.DfStats,
                      k: Int, outDir: String,
-                     checkpointDir: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Tfidf.topTermsAgainst(model, batch,
-            col("doc_id"), col("text"), k)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("dfscore_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                     checkpointDir: Option[String] = None): Unit =
+    probeBatches(docs, outDir, checkpointDir)(
+      graft.ops.Tfidf.topTermsAgainst(model, _, col("doc_id"), col("text"), k))
 
   /** SELF-MAINTAINING df stats — [[selfNearDupBatches]]'s shape for
     * the salience reference: each micro-batch scores against the
-    * STANDING stats (hits land exactly-once), then folds in via
+    * STANDING stats, then folds in via
     * [[graft.ops.Tfidf.extendDfStats]] (additive df counts,
     * O(batch + vocab)), so corpus-wide salience tracks everything the
     * crawl has seen. Because extend provably equals retraining on the
     * union, the standing stats after any number of batches ARE
     * `trainDfStats(everything seen)` — fold-in order invisible
-    * (spec-pinned). Same whole-body retry guard and restart contract
-    * as the other self loops. Returns the final stats.
+    * (spec-pinned). Returns the final stats.
     */
   def selfDfBatches(docs: DataFrame, seed: graft.ops.Tfidf.DfStats,
                     k: Int, outDir: String,
                     checkpointDir: Option[String] = None)
-      : graft.ops.Tfidf.DfStats = {
-    import org.apache.spark.sql.functions.col
-    var model = seed
-    var lastExtended = -1L
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // whole-body retry guard (see selfNearDupBatches): a retried
-        // batch re-scored against the already-extended stats would
-        // overwrite the first attempt's output with different scores
-        if (batchId > lastExtended) {
-          val b = batch.localCheckpoint()
-          graft.ops.Tfidf.topTermsAgainst(model, b,
-              col("doc_id"), col("text"), k)
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-          model = graft.ops.Tfidf.extendDfStats(model, b,
-            col("doc_id"), col("text"))
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selfdf_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    model
-  }
+      : graft.ops.Tfidf.DfStats =
+    foldBatches(docs, seed, checkpointDir) { (model, batch, batchId) =>
+      val b = batch.localCheckpoint()
+      landBatch(graft.ops.Tfidf.topTermsAgainst(model, b,
+        col("doc_id"), col("text"), k), outDir, batchId)
+      graft.ops.Tfidf.extendDfStats(model, b, col("doc_id"), col("text"))
+    }._1
 
   /** SELF-MAINTAINING exact-substring inventory —
     * [[selfDfBatches]]'s shape for the repeat-class index: each
@@ -860,14 +713,13 @@ object StreamingIngest {
     * [[graft.ops.SuffixArray.RepeatInventory]] via the bipartite
     * completion pass (O(batch + candidates), never a corpus
     * re-mine), and the batch's own duplicated spans (vs everything
-    * the crawl has seen, this batch included) land exactly-once
-    * under `ingest_batch=N`. Because extend provably equals the full
+    * the crawl has seen, this batch included) land per batch.
+    * Because extend provably equals the full
     * re-mine, the standing inventory after any number of batches IS
     * `trainRepeatGroups(everything seen)` — fold-in order invisible
     * (spec-pinned). The standing corpus TEXT grows as a lazy union of
     * the checkpointed batches (the additive-artifact convention:
-    * only candidate documents of it are ever read). Same whole-body
-    * retry guard and restart contract as the other self loops.
+    * only candidate documents of it are ever read).
     * Returns the final (inventory, corpus) pair.
     *
     * `compactEvery` (0 = off) is the LONG-STREAM plan-compaction
@@ -889,48 +741,29 @@ object StreamingIngest {
                         checkpointDir: Option[String] = None,
                         compactEvery: Int = 0)
       : (graft.ops.SuffixArray.RepeatInventory, DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    var corpus = seedDocs.select(col("doc_id"), col("text"))
-    var model = seed
-    var lastExtended = -1L
     var ownedMembers = false // the seed's members pin is the caller's
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // whole-body retry guard: a retried batch would fold the same
-        // doc ids into the inventory twice, breaking extend's
-        // disjoint-id contract
-        if (batchId > lastExtended) {
-          val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-          val prevMembers = model.members
-          model = graft.ops.SuffixArray.extendRepeatGroups(model, corpus, b,
-            col("doc_id"), col("text"))
-          // extend returned an eagerly-pinned members table, so the
-          // superseded one is dead — drop it unless it is the caller's
-          // seed artifact (the self-twin hygiene)
-          if (ownedMembers)
-            graft.ops.ConnectedComponents.unpersistCheckpoint(prevMembers)
-          ownedMembers = true
-          model.members
-            .join(b.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-          corpus = corpus.unionByName(b)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            corpus = corpus.localCheckpoint(true,
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-            model = graft.ops.SuffixArray.RepeatInventory(model.members,
-              model.fps.localCheckpoint(true,
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
-              model.minLen)
-          }
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selfsubstr_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    (model, corpus)
+    foldBatches(docs, (seed, seedDocs.select(col("doc_id"), col("text"))),
+        checkpointDir) { case ((prev, prevCorpus), batch, batchId) =>
+      val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+      val model = graft.ops.SuffixArray.extendRepeatGroups(prev, prevCorpus, b,
+        col("doc_id"), col("text"))
+      // extend returned an eagerly-pinned members table, so the
+      // superseded one is dead
+      if (ownedMembers)
+        graft.ops.ConnectedComponents.unpersistCheckpoint(prev.members)
+      ownedMembers = true
+      landBatch(model.members
+        .join(b.select(col("doc_id")), Seq("doc_id"), "left_semi"), outDir, batchId)
+      val corpus = prevCorpus.unionByName(b)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+        val c = corpus.localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        (graft.ops.SuffixArray.RepeatInventory(model.members,
+          model.fps.localCheckpoint(true,
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
+          model.minLen), c)
+      } else (model, corpus)
+    }._1
   }
 
   /** SELF-MAINTAINING winnowed PAIR gate —
@@ -940,13 +773,13 @@ object StreamingIngest {
     * seen ([[graft.ops.SubstringDedup.dupPairsAgainst]] — the
     * standing fps bloom-pruned on the batch's hashes, batch↔standing
     * and batch↔batch pairs, O(batch + true overlap)), the pairs land
-    * exactly-once under `ingest_batch=N`, and the batch folds in by
+    * per batch, and the batch folds in by
     * plain fps append (winnowing is per-document, so extend IS the
     * rebuild — no completion pass). Union over all batches ==
     * `verbatimDupPairs(everything seen)` minus seed-corpus-internal
     * pairs (each pair lands exactly when its LATER document arrives)
-    * — spec-pinned. Same whole-body retry guard, restart contract,
-    * and `compactEvery` plan-compaction cadence as
+    * — spec-pinned. Same
+    * `compactEvery` plan-compaction cadence as
     * [[selfSubstrBatches]]. Returns the final (index, corpus) pair.
     */
   def selfWinnowBatches(docs: DataFrame, seedDocs: DataFrame,
@@ -954,124 +787,72 @@ object StreamingIngest {
                         outDir: String,
                         checkpointDir: Option[String] = None,
                         compactEvery: Int = 0)
-      : (graft.ops.SubstringDedup.WinnowIndex, DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    var corpus = seedDocs.select(col("doc_id"), col("text"))
-    var idx = seed
-    var lastExtended = -1L
-    val q = docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // whole-body retry guard: a retried batch would re-probe
-        // against the already-extended index — batch docs would pair
-        // with their own fps rows and the overwrite would differ
-        if (batchId > lastExtended) {
-          val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-          // OVERLAP probe write and fold (guide §2.6): the fold's
-          // batch fingerprint pass reads nothing from the probe's
-          // output. Disjointness stays proven-and-loud: the probe
-          // write runs its riding guard over the same (standing fps,
-          // batch) pair within this batch body — the documented
-          // opt-out — and a collision fails the batch before the next
-          // one folds.
-          val prevIdx = idx
-          val (_, next) = graft.ops.Parallel.both(
-            graft.ops.SubstringDedup
-              .dupPairsAgainst(prevIdx, corpus, b, col("doc_id"), col("text"))
-              .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId"),
-            graft.ops.SubstringDedup.extendWinnowIndex(prevIdx, b,
-              col("doc_id"), col("text"), checkDisjoint = false))
-          idx = next
-          corpus = corpus.unionByName(b)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            corpus = corpus.localCheckpoint(true,
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-            idx = graft.ops.SubstringDedup.WinnowIndex(
-              idx.fps.localCheckpoint(true,
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
-              idx.minLen, idx.k)
-          }
-          lastExtended = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("selfwinnow_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    (idx, corpus)
-  }
+      : (graft.ops.SubstringDedup.WinnowIndex, DataFrame) =
+    foldBatches(docs, (seed, seedDocs.select(col("doc_id"), col("text"))),
+        checkpointDir) { case ((prevIdx, prevCorpus), batch, batchId) =>
+      val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+      // OVERLAP probe write and fold (guide §2.6): the fold's
+      // batch fingerprint pass reads nothing from the probe's
+      // output. Disjointness stays proven-and-loud: the probe
+      // write runs its riding guard over the same (standing fps,
+      // batch) pair within this batch body — the documented
+      // opt-out — and a collision fails the batch before the next
+      // one folds.
+      val (_, idx) = graft.ops.Parallel.both(
+        landBatch(graft.ops.SubstringDedup
+          .dupPairsAgainst(prevIdx, prevCorpus, b, col("doc_id"), col("text")),
+          outDir, batchId),
+        graft.ops.SubstringDedup.extendWinnowIndex(prevIdx, b,
+          col("doc_id"), col("text"), checkDisjoint = false))
+      val corpus = prevCorpus.unionByName(b)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+        val c = corpus.localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        (graft.ops.SubstringDedup.WinnowIndex(
+          idx.fps.localCheckpoint(true,
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
+          idx.minLen, idx.k), c)
+      } else (idx, corpus)
+    }._1
 
   /** Streaming twin of the PERCEPTUAL image near-dup gate: every
     * micro-batch of a media stream (a crawl's image payloads) is
     * decoded, aHashed, and Hamming-probed against a STANDING
     * [[graft.multimodal.PerceptualHash.HashIndex]] built once before
-    * the stream starts. Same exactly-once `ingest_batch=N` overwrite
-    * contract as [[nearDupBatches]].
+    * the stream starts.
     */
   def mediaNearDupBatches(media: DataFrame,
                           corpusIndex: graft.multimodal.PerceptualHash.HashIndex,
                           maxDist: Int, outDir: String,
-                          checkpointDir: Option[String] = None): Unit = {
-    val q = media.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.multimodal.PerceptualHash
-          .probeImages(corpusIndex, batch, maxDist)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("mediand_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                          checkpointDir: Option[String] = None): Unit =
+    probeBatches(media, outDir, checkpointDir)(
+      graft.multimodal.PerceptualHash.probeImages(corpusIndex, _, maxDist))
 
   /** Streaming twin of the AUDIO energy-hash near-dup gate: every
     * micro-batch of a media stream is decoded, energy-hashed, and
     * Hamming-probed against a STANDING audio
     * [[graft.multimodal.PerceptualHash.HashIndex]] built once before
-    * the stream starts. Same exactly-once `ingest_batch=N` overwrite
-    * contract as [[nearDupBatches]].
+    * the stream starts.
     */
   def audioNearDupBatches(media: DataFrame,
                           corpusIndex: graft.multimodal.PerceptualHash.HashIndex,
                           maxDist: Int, outDir: String,
-                          checkpointDir: Option[String] = None): Unit = {
-    val q = media.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.multimodal.PerceptualHash
-          .probeAudio(corpusIndex, batch, maxDist)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("audiond_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                          checkpointDir: Option[String] = None): Unit =
+    probeBatches(media, outDir, checkpointDir)(
+      graft.multimodal.PerceptualHash.probeAudio(corpusIndex, _, maxDist))
 
   /** Streaming twin of the VIDEO shot-overlap gate: every micro-batch
     * of a clip stream has only its SAMPLED frames selectively decoded
     * and probed against a STANDING
     * [[graft.multimodal.PerceptualHash.FrameIndex]] built once before
-    * the stream starts. Same exactly-once `ingest_batch=N` overwrite
-    * contract as [[nearDupBatches]].
+    * the stream starts.
     */
   def videoNearDupBatches(media: DataFrame,
                           corpusIndex: graft.multimodal.PerceptualHash.FrameIndex,
                           everyN: Int, minShared: Int, outDir: String,
-                          checkpointDir: Option[String] = None): Unit = {
-    val q = media.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.multimodal.PerceptualHash
-          .probeVideo(corpusIndex, batch, everyN, minShared)
-          .write.mode("overwrite").parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        StreamBench.tempDir("videond_ckpt"))) // tracked: removed at JVM exit
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                          checkpointDir: Option[String] = None): Unit =
+    probeBatches(media, outDir, checkpointDir)(
+      graft.multimodal.PerceptualHash.probeVideo(corpusIndex, _, everyN, minShared))
 
   /** Run a streaming frame to completion against a named memory sink;
     * returns the materialized result. Test/driver harness only.

@@ -46,4 +46,27 @@ class LlmSpec extends AnyFunSuite {
       () => new StubBatchClient).orderBy("id").collect()
     assert(out.map(_.toString).toSeq == again.map(_.toString).toSeq)
   }
+
+  test("flattenContent over withCompletions makes one chat call per non-null row") {
+    LlmSpec.chatCalls.set(0)
+    val df = Seq(("r1", "ab"), ("r2", "abc"), ("r3", "abcd"), ("r4", null.asInstanceOf[String]))
+      .toDF("custom_id", "txt")
+    val out = graft.ops.Parse.flattenContent(LlmUdf.withCompletions(df, "txt", "content",
+      "m", "sys", () => new LlmSpec.CountingClient)).collect()
+    assert(LlmSpec.chatCalls.get == 3)
+    // two array answers of two records, one object answer, one null answer
+    assert(out.length == 6)
+  }
+}
+
+object LlmSpec {
+  val chatCalls = new java.util.concurrent.atomic.AtomicLong
+
+  /** Counts chat calls; even-length prompts answer with a JSON array. */
+  class CountingClient extends StubBatchClient {
+    override def chat(model: String, system: String, user: String): String = {
+      chatCalls.incrementAndGet()
+      if (user.length % 2 == 0) """[{"n":1},{"n":2}]""" else super.chat(model, system, user)
+    }
+  }
 }

@@ -58,4 +58,21 @@ class ItemStorePushdownSpec extends AnyFunSuite {
     assert(got == expected)
     assert(got.nonEmpty && got.size < 10000, "cutoff should skip part of the store")
   }
+
+  test("a JSON-number fractional epoch inside the window survives it") {
+    // FIXTURES B1 row a6's shape: the store renders the float epoch in
+    // scientific notation (1.7162412349E9)
+    val page = java.nio.file.Files.createTempDirectory("itemstore_float_ts")
+    java.nio.file.Files.write(page.resolve("page-0.jsonl"), java.util.Arrays.asList(
+      """{"id":"a5","est_timestamp":1716240000.5,"note":"before the window"}""",
+      """{"id":"a6","est_timestamp":1716241234.9,"note":"inside the window"}"""))
+    val items = spark.read.format("graft.sources.ItemStore")
+      .option("path", page.toString).load()
+    val kept = items
+      .withColumn("e", Timestamps.flexTsEpoch(Ingest.coalesceTsCandidates(items)))
+      .filter(Timestamps.recentFilter(col("e"), 1716241000L))
+      .select(col("id"), col("e")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(kept == Seq(("a6", 1716241234L)))
+  }
 }

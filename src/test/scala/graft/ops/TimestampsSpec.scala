@@ -20,13 +20,17 @@ class TimestampsSpec extends AnyFunSuite {
       .toSeq
 
   test("epoch seconds int-string") {
-    assert(parse("1716241234") == Seq(Some(1716241234L)))
+    // a JSON-number epoch renders in scientific notation
+    assert(parse("1716241234", "1.716241234E9", "1.716241234e+9") ==
+      Seq.fill(3)(Some(1716241234L)))
   }
   test("epoch millis heuristic (>1e12 divides by 1000)") {
-    assert(parse("1716241234567") == Seq(Some(1716241234L)))
+    assert(parse("1716241234567", "1.716241234567E12") ==
+      Seq.fill(2)(Some(1716241234L)))
   }
   test("float seconds truncate toward zero like Python int()") {
-    assert(parse("1716241234.9") == Seq(Some(1716241234L)))
+    assert(parse("1716241234.9", "1.7162412349E9") ==
+      Seq.fill(2)(Some(1716241234L)))
   }
   test("ISO-8601 with Z suffix") {
     assert(parse("2025-05-19T21:20:00Z") == Seq(Some(1747689600L)))
@@ -45,8 +49,8 @@ class TimestampsSpec extends AnyFunSuite {
     assert(parse("2025-05-19T17:20:00 EDT") == Seq(Some(1747689600L)))
   }
   test("garbage, empty and null are NULL") {
-    assert(parse("not-a-date", "", "2025-13-99 99:99:99") ==
-      Seq(None, None, None))
+    assert(parse("not-a-date", "", "2025-13-99 99:99:99", "1.7E") ==
+      Seq(None, None, None, None))
   }
   test("numeric epoch passed as long column") {
     val got = Seq(1716241234L).toDF("v")

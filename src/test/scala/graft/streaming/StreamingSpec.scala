@@ -1134,4 +1134,47 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("event_type").isin("click", "view", "purchase")).count()
     assert(matched == known)
   }
+
+  test("foldBatches' retry guard: a repeated batchId is skipped, a failed step reruns") {
+    val batch = spark.range(1).toDF()
+    var runs = 0
+    val step = StreamingIngest.guardedStep(0) { (s, _, batchId) =>
+      runs += 1
+      s + batchId.toInt + 1
+    }
+    assert(step(batch, 0L) == 1)
+    assert(step(batch, 0L) == 1, "a repeated batchId returns the unchanged state")
+    assert(runs == 1, "a repeated batchId must not rerun the step")
+    assert(step(batch, 1L) == 3 && runs == 2)
+
+    var failNext = true
+    val flaky = StreamingIngest.guardedStep(10) { (s, _, _) =>
+      runs += 1
+      if (failNext) { failNext = false; throw new RuntimeException("transient") }
+      s + 1
+    }
+    intercept[RuntimeException](flaky(batch, 0L))
+    assert(flaky(batch, 0L) == 11, "a failed step must not advance the guard")
+    assert(flaky(batch, 0L) == 11 && runs == 4)
+  }
+
+  test("nearDupBatches without a checkpointDir deletes its temp checkpoint") {
+    import graft.ops.MinHash
+    def ckptDirs() = Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .count(f => f.isDirectory && f.getName.startsWith(StreamingIngest.CheckpointPrefix))
+    val all = Tables.documents(spark, SparkTestSession.Sf)
+    val docs = all.filter(col("doc_id") % 5 === 1).limit(40)
+    val inDir = java.nio.file.Files.createTempDirectory("ndc_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("ndc_out").toString
+    docs.repartition(2).write.mode("overwrite").parquet(inDir)
+    val cidx = MinHash.buildIndex(all.filter(col("doc_id") % 5 === 0),
+      col("doc_id"), col("text"))
+    val stream = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    val before = ckptDirs()
+    StreamingIngest.nearDupBatches(stream, cidx, 0.5, outDir)
+    assert(new java.io.File(outDir).listFiles().count(_.getName.startsWith("ingest_batch=")) == 2)
+    assert(ckptDirs() == before)
+  }
 }
