@@ -15,7 +15,9 @@ import graft.state.StatusStore
   * crossing a network boundary (upload, batch create, poll, download)
   * stays on the driver behind the injected [[BatchClient]] — never a
   * client call inside an operator (SURVEY §7; offline envs inject the
-  * deterministic stub).
+  * deterministic stub). The one deliberate exception is X6
+  * [[graft.llm.LlmUdf]], the per-row chat path, which calls the client
+  * from inside its tasks.
   */
 object Orchestrator {
 

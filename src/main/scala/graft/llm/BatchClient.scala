@@ -22,7 +22,14 @@ trait BatchClient extends Serializable {
   def status(batchId: String): BatchStatus
   /** SNK2: download an output file's bytes. */
   def download(fileId: String): Array[Byte]
-  /** X6 unit: one chat completion (used by the per-row UDF path). */
+  /** X6 unit: one chat completion (used by the per-row UDF path).
+    *
+    * Must be thread-safe: [[LlmUdf.withCompletions]] calls a task's one
+    * client from up to [[LlmUdf.InFlightPerTask]] threads at once. Rate
+    * limiting (429 backoff, token buckets) belongs in here, shared by
+    * those calls, which is why the window is a constant and not an
+    * option.
+    */
   def chat(model: String, system: String, user: String): String
 }
 
@@ -54,14 +61,14 @@ object Retry {
 /** Deterministic offline stub: ids are content-addressed, every batch
   * completes immediately, and `chat` answers with a strict-JSON
   * analytic record derived from the input (stable across runs — the
-  * test-oracle property).
+  * test-oracle property). Stateless, so thread-safe.
   */
 class StubBatchClient extends BatchClient {
   override def uploadFile(path: String): String =
-    s"file_stub_${math.abs(path.hashCode)}"
+    s"file_stub_${math.abs(path.hashCode.toLong)}"
   override def createBatch(inputFileId: String, endpoint: String,
                            completionWindow: String): String =
-    s"batch_stub_${math.abs((inputFileId + endpoint).hashCode)}"
+    s"batch_stub_${math.abs((inputFileId + endpoint).hashCode.toLong)}"
   override def status(batchId: String): BatchStatus =
     BatchStatus(batchId, "completed", Some(s"out_$batchId"))
   override def download(fileId: String): Array[Byte] = Array.emptyByteArray
