@@ -424,7 +424,7 @@ object SparkEntry {
     // TOP (%25) sample only, each layer's walk hands its best-2 down,
     // layer 0 returns the top-5. Coverage is set by the BOTTOM upper
     // sample (n/5) while the scan cost is the top's (n/25) — the
-    // de-aliased GraphRecall r13 curve: depth-2 recall 0.938–1.000
+    // de-aliased r13 recall curve (BASELINE.md): depth-2 recall 0.938–1.000
     // through ×64 where flat sampling at the same scan cost
     // collapses to 0.06. Layer 0 reads the session-shared edge
     // artifact; upper layers are geometrically small builds. Fully

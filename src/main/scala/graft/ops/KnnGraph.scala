@@ -50,9 +50,9 @@ object KnnGraph {
     * assignment is n·nCentroids dots — balanced at nCentroids ∝ √n
     * (the standard IVF nlist rule); holding cellPop constant instead
     * (nCentroids ∝ n) buys linear candidates at quadratic-ish
-    * assignment. The ScaleSmoke `knn_graph` curve runs the latter
-    * (constant cell population) and is measured near-flat at the
-    * smoke's sizes.
+    * assignment. The round-11 ×64 build curve (BASELINE.md) runs the
+    * latter (constant cell population) and is measured near-flat
+    * (exponent 0.16) at its sizes.
     */
   /** `centroids` (opt-in): a TRAINED coarse quantizer
     * ([[Similarity.kmeansCentroids]] — the replayable fixed-point
@@ -369,7 +369,7 @@ object KnnGraph {
     * lost). Returns the final frontier's top `k` per query:
     * (query_id, vec_id, score, rank).
     *
-    * SCOPE, from the GraphRecall ×64 curves (BASELINE.md r12): the
+    * SCOPE, from the ×64 recall curves (BASELINE.md r12): the
     * graph family's scale strength is the EDGE ARTIFACT for
     * corpus-member queries — on cluster-structured data the
     * [[refineToConvergence]]d graph's own out-edges hit recall 1.000
@@ -441,7 +441,7 @@ object KnnGraph {
     * broadcast-query scan an upper layer replaces with a walk), then
     * the usual layer-0 beam rounds.
     *
-    * WHY (measured, GraphRecall ×64, BASELINE.md r12): single-layer
+    * WHY (measured, ×64 recall curves, BASELINE.md r12): single-layer
     * beam recall is ENTRY-COVERAGE-bound. On cluster-structured data
     * (the regime real embeddings live in) the measured recall ≈ the
     * fraction of clusters the entry set can reach — centroid entries
@@ -692,7 +692,7 @@ object KnnGraph {
     * so the unrolled oracle replays the full descent.
     */
   /** `handoff`: how many best nodes each layer seeds the next with
-    * (HNSW's ef-per-layer dial). Measured (GraphRecall r13, ×64
+    * (HNSW's ef-per-layer dial). Measured (BASELINE.md r13, ×64
     * clustered): widening it 2→8 does NOT move recall — each layer's
     * keep-best frontier already converges to one neighborhood, so the
     * extra seeds are its near-duplicates. DEPTH is the real dial:

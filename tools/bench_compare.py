@@ -29,8 +29,10 @@ entries land in workload_changed with the declaration echoed
 (kind=declared) and do not trip the gate; an UNUSED declaration is a
 hard error so a stale file can never pre-waive a future regression.
 
-With --retimed RETIMED.json (a {"query": isolated_median_sec} map,
-authored from tools/ReTime receipts), a would-be regression whose
+With --retimed RETIMED.json (a {"query": isolated_median_sec} map of
+isolated re-measures: the query alone in a clean JVM, one untimed
+warm-up drive, then the median of several timed drives; the committed
+RETIMED_r*.json files are such maps), a would-be regression whose
 ISOLATED re-measure is NOT itself gate-tripping vs the old record is
 session turbulence, not a plan regression: it lands in
 adjudicated_noise with both numbers echoed and does not trip the
@@ -122,7 +124,7 @@ workload_changed = [k for k in over_gate
                     or k in declared]
 bad = [k for k in over_gate if k not in workload_changed]
 # adjudicate by isolated re-measure: a would-be regression whose
-# clean-JVM median (ReTime) is NOT itself gate-tripping vs old is
+# clean-JVM median (the --retimed map) is NOT itself gate-tripping vs old is
 # session turbulence. The re-measure must carry the evidence — a
 # retimed value that still trips the gate clears nothing.
 adjudicated = [k for k in bad
