@@ -1,17 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.logging.log4j.LogManager
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llm.{BatchClient, BatchLifecycle}
 import graft.ops.{Ingest, Parse, Payload, Watermark}
 import graft.state.StatusStore
+import graft.streaming.StreamingIngest.deleteTree
 
 /** End-to-end pipeline composition (SURVEY.md §3.1 stages a–g;
   * reference: batch/main.py:147-365 `orchestrate` +
   * batch/agent_api.py:12-35 programmatic surface).
   *
-  * Stages a–c are ONE lazy Spark plan ([[Ingest.run]]); everything
+  * Stages a–c are ONE lazy Spark plan ([[Ingest.fresh]] →
+  * [[Ingest.requests]]), run by one action, the JSONL write; everything
   * crossing a network boundary (upload, batch create, poll, download)
   * stays on the driver behind the injected [[BatchClient]] — never a
   * client call inside an operator (SURVEY §7; offline envs inject the
@@ -25,17 +31,25 @@ object Orchestrator {
                          inputFileId: String, recordCount: Long,
                          status: String, outputFileId: Option[String])
 
-  /** One incremental ingest+submit round for a logical table.
-    * Ordering contract (reference main.py:258-278): the watermark is
-    * advanced and persisted BEFORE the external submit, so a submit
-    * failure never causes resends.
+  /** One incremental ingest+submit round for a logical table, run as
+    * ONE Spark action: the JSONL write. The request count and the new
+    * watermark are `Dataset.observe` metrics of that write, not extra
+    * passes over the store.
     *
-    * @return None when no new rows (reference "No new data – exiting").
-    */
-  /** T5: `noTsFilter = true` exempts the table from BOTH the temporal
+    * Ordering contract (reference main.py:245-278): write the JSONL →
+    * `testOnly` return → persist the watermark → upload and submit, so a
+    * submit failure never causes resends.
+    *
+    * T5: `noTsFilter = true` exempts the table from BOTH the temporal
     * cutoff and the watermark filter (static reference data — process
     * everything, advance nothing; reference `_NO_TS_FILTER`,
     * dynamo_fetcher.py:44-52).
+    *
+    * Emits one JSON line per round on the `graft` logger at INFO.
+    *
+    * @return None when no new rows (reference "No new data – exiting");
+    *         the previous round's JSONL and the watermark stay as they
+    *         were and the client is not called.
     */
   def orchestrate(items: DataFrame, table: String, cutoffEpochSec: Long,
                   orderCol: Column, modelKey: String, workDir: String,
@@ -45,67 +59,101 @@ object Orchestrator {
                   noTsFilter: Boolean = false,
                   testOnly: Boolean = false,
                   systemPrompt: String = Payload.SystemPrompt): Option[BatchRecord] = {
+    val t0 = System.nanoTime()
     val storePath = s"$workDir/batch_watermark.json"
     val store = Watermark.load(storePath)
-    val requests = Ingest.run(items, cutoffEpochSec, orderCol, modelKey,
-      watermark = store.get(table), applyTsFilter = !noTsFilter,
-      systemPrompt = systemPrompt).cache()
-    try {
-      val n = requests.count()
-      if (n == 0) return None
+    val before = store.get(table)
+    val fresh = Ingest.fresh(items, cutoffEpochSec, before,
+      applyTsFilter = !noTsFilter)
+    // A1: the new watermark is the max `__ts` of the fresh rows (in
+    // window, newer than the mark, before the text gate and dedup),
+    // observed by the write below. Bypass tables have no `__ts` and
+    // never advance the watermark.
+    val tsMax = Observation()
+    val observed =
+      if (noTsFilter) fresh else fresh.observe(tsMax, max(col("__ts")).as("max_ts"))
 
-      // SNK1 first, so `--test` can stop right after JSONL generation
-      // with nothing external touched and no watermark advanced
-      // (reference order: write_jsonl → test_only return → watermark →
-      // submit; main.py:245-278). Dry-run output lives under a separate
-      // jsonl_test/ dir (main.py's jsonl_test isolation) so a later
-      // production run can never re-submit or clobber a test file.
-      val jsonlPath =
-        if (testOnly) s"$workDir/jsonl_test/requests_$table"
-        else s"$workDir/requests_$table"
-      Payload.writeJsonl(requests, jsonlPath)
-      if (testOnly)
-        return Some(BatchRecord("", table, Payload.resolveModel(modelKey),
-          "", n, "test_only", None))
-
-      // A1: advance watermark from the surviving rows' source ts —
-      // requests no longer carry ts, so recompute max from the gated
-      // source frame (same plan prefix, Catalyst dedups the scan).
-      // Bypass tables never advance the watermark (there is no
-      // incremental window to remember).
-      if (!noTsFilter) {
-        val tsMax = Watermark.advance(
-          items.select(ops.Timestamps.flexTsEpoch(
-            Ingest.coalesceTsCandidates(items)).as("__ts"))
-            .filter(col("__ts").isNotNull && col("__ts") >= cutoffEpochSec)
-            .filter(store.get(table).map(w => col("__ts") > w).getOrElse(lit(true))),
-          col("__ts"))
-        tsMax.foreach(m => Watermark.save(storePath, store + (table -> m)))
-      }
-
-      // X1 → X2
-      val fileId = client.uploadFile(jsonlPath)
-      val batchId = client.createBatch(fileId)
-
-      // Durable status record BEFORE any wait, so a crash/restart can
-      // auto-resume this batch (main.py:283-293).
-      StatusStore.record(statusPath(workDir), batchId, StatusStore.Entry(
-        createdUtc = java.time.Instant.now().toString,
-        status = "submitted", model = Payload.resolveModel(modelKey),
-        inputJsonl = jsonlPath, inputFileId = fileId, tableName = table,
-        recordCount = n))
-
-      val initial = BatchRecord(batchId, table, Payload.resolveModel(modelKey),
-        fileId, n, "submitted", None)
-      if (!wait) Some(initial)
+    // SNK1 first, so `--test` can stop right after JSONL generation
+    // with nothing external touched and no watermark advanced. Dry-run
+    // output lives under a separate jsonl_test/ dir (main.py's
+    // jsonl_test isolation) so a later production run can never
+    // re-submit or clobber a test file. The write lands in a staging
+    // dir that replaces the previous file only when it holds rows.
+    val jsonlPath =
+      if (testOnly) s"$workDir/jsonl_test/requests_$table"
+      else s"$workDir/requests_$table"
+    val staging = s"$jsonlPath.staging"
+    val n = Payload.writeJsonl(
+      Ingest.requests(observed, orderCol, modelKey, systemPrompt), staging)
+    var after = before
+    val rec =
+      if (n == 0) { deleteTree(Paths.get(staging)); None }
       else {
-        val st = BatchLifecycle.pollUntilTerminal(client, batchId,
-          pollEveryMs, sleep = sleep)
-        finalizeStatus(workDir, batchId, st.status, st.outputFileId, None)
-        Some(initial.copy(status = st.status, outputFileId = st.outputFileId))
+        deleteTree(Paths.get(jsonlPath))
+        Files.move(Paths.get(staging), Paths.get(jsonlPath))
+        if (testOnly)
+          Some(BatchRecord("", table, Payload.resolveModel(modelKey), "", n,
+            "test_only", None))
+        else {
+          if (!noTsFilter)
+            Payload.observedLong(tsMax, "max_ts").filter(_ > 0).foreach { m =>
+              Watermark.save(storePath, store + (table -> m))
+              after = Some(m)
+            }
+          Some(submit(jsonlPath, table, modelKey, n, workDir, client, wait,
+            pollEveryMs, sleep))
+        }
       }
-    } finally requests.unpersist()
+    logRound(table, n, before, after, rec.map(_.batchId), t0)
+    rec
   }
+
+  /** X1 → X2, the durable status record, then the optional wait. */
+  private def submit(jsonlPath: String, table: String, modelKey: String,
+                     n: Long, workDir: String, client: BatchClient,
+                     wait: Boolean, pollEveryMs: Long,
+                     sleep: Long => Unit): BatchRecord = {
+    val fileId = client.uploadFile(jsonlPath)
+    val batchId = client.createBatch(fileId)
+
+    // Durable status record BEFORE any wait, so a crash/restart can
+    // auto-resume this batch (main.py:283-293).
+    StatusStore.record(statusPath(workDir), batchId, StatusStore.Entry(
+      createdUtc = java.time.Instant.now().toString,
+      status = "submitted", model = Payload.resolveModel(modelKey),
+      inputJsonl = jsonlPath, inputFileId = fileId, tableName = table,
+      recordCount = n))
+
+    val initial = BatchRecord(batchId, table, Payload.resolveModel(modelKey),
+      fileId, n, "submitted", None)
+    if (!wait) initial
+    else {
+      val st = BatchLifecycle.pollUntilTerminal(client, batchId,
+        pollEveryMs, sleep = sleep)
+      finalizeStatus(workDir, batchId, st.status, st.outputFileId, None)
+      initial.copy(status = st.status, outputFileId = st.outputFileId)
+    }
+  }
+
+  private val log = LogManager.getLogger("graft")
+  private val mapper = new ObjectMapper()
+
+  /** The round's one report line, built only when INFO is on. */
+  private def logRound(table: String, requests: Long, before: Option[Long],
+                       after: Option[Long], batchId: Option[String],
+                       t0: Long): Unit =
+    if (log.isInfoEnabled) {
+      val line = mapper.createObjectNode()
+        .put("event", "orchestrate_round").put("table", table)
+        .put("requests", requests)
+      def mark(k: String, v: Option[Long]) =
+        v.fold(line.putNull(k))(line.put(k, _))
+      mark("watermark_before", before)
+      mark("watermark_after", after)
+      batchId.filter(_.nonEmpty).fold(line.putNull("batch_id"))(line.put("batch_id", _))
+      line.put("ms", (System.nanoTime() - t0) / 1000000L)
+      log.info(mapper.writeValueAsString(line))
+    }
 
   def statusPath(workDir: String): String = s"$workDir/batch_status.json"
 

@@ -33,18 +33,31 @@ object Ingest {
       run(items, nowEpochSec - (hours * 3600).toLong, orderCol, modelKey,
         watermark, systemPrompt = systemPrompt)
 
-  /** @param applyTsFilter false = T5 bypass: no ts normalization, no
-    *                       cutoff, no watermark — every row flows
-    *                       through (tables lacking a timestamp column
-    *                       entirely still work; reference
-    *                       `_NO_TS_FILTER`, dynamo_fetcher.py:44-52).
+  /** `fresh` → `requests`: the whole ingest plan for one round.
+    *
+    * @param applyTsFilter false = T5 bypass: no ts normalization, no
+    *                      cutoff, no watermark — every row flows
+    *                      through (tables lacking a timestamp column
+    *                      entirely still work; reference
+    *                      `_NO_TS_FILTER`, dynamo_fetcher.py:44-52).
     */
   def run(items: DataFrame, cutoffEpochSec: Long, orderCol: Column,
           modelKey: String = Payload.DefaultKey,
           watermark: Option[Long] = None,
           applyTsFilter: Boolean = true,
-          systemPrompt: String = Payload.SystemPrompt): DataFrame = {
-    val fresh = if (!applyTsFilter) items else {
+          systemPrompt: String = Payload.SystemPrompt): DataFrame =
+    requests(fresh(items, cutoffEpochSec, watermark, applyTsFilter),
+      orderCol, modelKey, systemPrompt)
+
+  /** Stages a–b: the rows a round may submit — `__ts` normalised, inside
+    * the look-back cutoff and strictly newer than the watermark, before
+    * any text gate or dedup. `applyTsFilter = false` passes `items`
+    * through untouched.
+    */
+  def fresh(items: DataFrame, cutoffEpochSec: Long,
+            watermark: Option[Long] = None,
+            applyTsFilter: Boolean = true): DataFrame =
+    if (!applyTsFilter) items else {
       val tsNorm = Timestamps.flexTsEpoch(coalesceTsCandidates(items))
       val recent = items
         .withColumn("__ts", tsNorm)
@@ -52,6 +65,13 @@ object Ingest {
           Timestamps.recentFilter(col("__ts"), cutoffEpochSec))
       Watermark.filterNew(recent, col("__ts"), watermark)
     }
+
+  /** Stage c: a [[fresh]] frame → batch request records (usable-text
+    * gate, first-wins dedup, payload projection).
+    */
+  def requests(fresh: DataFrame, orderCol: Column,
+               modelKey: String = Payload.DefaultKey,
+               systemPrompt: String = Payload.SystemPrompt): DataFrame = {
     val usable = TextExtract.usable(fresh, "__text")
     val deduped = Dedup.dedupItems(usable, orderCol)
     // Scale default: per-partition numbering (`p<pid>_<n>`), no global

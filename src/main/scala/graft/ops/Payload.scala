@@ -1,6 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -163,13 +167,29 @@ object Payload {
 
   /** Write as JSONL (text sink, one doc per line). Returns the row
     * count (the reference returns `(path, written)`:
-    * jsonl_formatter.py:77).
+    * jsonl_formatter.py:77), observed on the lines inside the write
+    * itself: the write is the only Spark action.
     */
   def writeJsonl(requests: DataFrame, path: String): Long = {
-    val lines = toJsonLines(requests).cache()
-    val n = lines.count()
-    lines.write.mode("overwrite").text(path)
-    lines.unpersist()
-    n
+    val written = Observation()
+    toJsonLines(requests).observe(written, count(lit(1)).as("n"))
+      .write.mode("overwrite").text(path)
+    observedLong(written, "n").getOrElse(0L)
   }
+
+  /** A metric observed by an action that has already run, or None.
+    * Spark completes an [[Observation]] from its listener bus after the
+    * action returns, so this waits for it, but only up to
+    * `ObservedWait`; Catalyst may also prune an observed node (an
+    * empty relation below it), which completes the observation with no
+    * values. A missing key, a null value and a wait that runs out all
+    * read as None, which callers treat as "no rows".
+    */
+  private[graft] def observedLong(o: Observation, key: String): Option[Long] = {
+    val row = Try(Await.result(o.future, ObservedWait)).toOption
+    row.flatMap(r => Try(r.getAs[Any](key)).toOption)
+      .collect { case v: java.lang.Number => v.longValue() }
+  }
+
+  private val ObservedWait = 10.seconds
 }

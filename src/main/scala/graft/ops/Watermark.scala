@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Incremental high-water-mark processing (operators S1/A1 in
@@ -71,23 +71,27 @@ object Watermark {
     * None on empty input or all-NULL ts (reference persists only when
     * max > 0, main.py:269-271).
     */
-  def advance(df: DataFrame, tsEpoch: Column): Option[Long] = {
-    val row = df.agg(max(tsEpoch).as("max_ts")).collect()(0)
-    if (row.isNullAt(0)) None else Some(row.getLong(0)).filter(_ > 0)
-  }
+  def advance(df: DataFrame, tsEpoch: Column): Option[Long] =
+    markAt(df.agg(max(tsEpoch).as("max_ts")).collect()(0), 0)
+
+  private def markAt(row: Row, i: Int): Option[Long] =
+    if (row.isNullAt(i)) None else Some(row.getLong(i)).filter(_ > 0)
 
   /** Orchestrated incremental step: filter above the stored mark, hand
     * the frame to `sink`, persisting the advanced mark BEFORE invoking
     * the sink (reference ordering, main.py:258-278). Returns rows seen.
+    * The row count and the new mark come from one aggregate, so a call
+    * runs two actions: that aggregate and the sink.
     */
   def runIncremental(df: DataFrame, tsEpoch: Column, storePath: String,
                      table: String)(sink: DataFrame => Unit): Long = {
     val store = load(storePath)
     val fresh = filterNew(df, tsEpoch, store.get(table)).cache()
     try {
-      val n = fresh.count()
+      val row = fresh.agg(count(lit(1)), max(tsEpoch)).collect()(0)
+      val n = row.getLong(0)
       if (n > 0) {
-        advance(fresh, tsEpoch).foreach { m =>
+        markAt(row, 1).foreach { m =>
           save(storePath, store + (table -> m))
         }
         sink(fresh)

@@ -232,7 +232,7 @@ object StreamingIngest {
   }
 
   /** Recursive best-effort delete. */
-  private[streaming] def deleteTree(p: Path): Unit =
+  private[graft] def deleteTree(p: Path): Unit =
     try Files.walk(p).iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists)
     catch { case _: Throwable => () }
 

@@ -206,7 +206,8 @@ class KnnGraphSpec extends AnyFunSuite {
     // (b) it equals refine applied `rounds` times to the seed — the
     // driver applies exactly the rounds it reports
     var unrolled = seed
-    for (_ <- 1 to rounds) unrolled = KnnGraph.refine(emb, unrolled, k = 5)
+    for (_ <- 1 to rounds)
+      unrolled = KnnGraph.refine(emb, unrolled, k = 5).localCheckpoint()
     assert(unrolled.orderBy("src", "rank")
       .as[(Long, Long, Double, Long)].collect().toSeq == settledRows)
     // (c) monotone per-node quality vs the seed graph
@@ -612,7 +613,8 @@ class KnnGraphSpec extends AnyFunSuite {
     val (settled, rounds) = KnnGraph.refineToConvergence(emb, seed, k = 5,
       maxRounds = 10, tolUpdates = tol)
     var unrolled = seed
-    for (_ <- 1 to rounds) unrolled = KnnGraph.refine(emb, unrolled, k = 5)
+    for (_ <- 1 to rounds)
+      unrolled = KnnGraph.refine(emb, unrolled, k = 5).localCheckpoint()
     val settledRows = settled.orderBy("src", "rank")
       .as[(Long, Long, Double, Long)].collect().toSeq
     assert(unrolled.orderBy("src", "rank")
